@@ -92,14 +92,3 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 "TIMESTAMP_NTZ '1970-01-01 00:00:00', ts)")))
     return df
 
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    """Register each table as a temp view (for the SQL API path)."""
-    dfs = load_all(spark, sf_dir)
-    for name, df in dfs.items():
-        df.createOrReplaceTempView(name)
-    return dfs

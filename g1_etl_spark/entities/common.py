@@ -4,32 +4,8 @@ from __future__ import annotations
 
 import json
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-ISO = "yyyy-MM-dd'T'HH:mm:ss"
-
-
-def iso(col) -> Column:
-    """Timestamp -> ISO-8601 string (utils.json_serial,
-    mmj/utilities/utils.py:60-64)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.date_format(c, ISO)
-
-
-def image_url(kind: str, id_col: Column, file_col: Column,
-              debug: bool = False) -> Column:
-    """S3 image URL build (mmj/utilities/utils.py:71-73; per-entity call
-    sites menu_items.py:118-128, settings.py:118-128). NULL file -> NULL."""
-    env = "development" if debug else "production"
-    return F.when(
-        file_col.isNotNull(),
-        F.format_string(
-            "https://wm-mmjmenu-images-%s.s3.amazonaws.com/%s/%s/large/%s"
-            if kind == "menu_items/images" else
-            "https://wm-mmjmenu-images-%s.s3.amazonaws.com/%s/%s/original/%s",
-            F.lit(env), F.lit(kind), id_col.cast("string"), file_col),
-    )
 
 
 def docs(df: DataFrame, doc_col: str = "doc") -> list[dict]:

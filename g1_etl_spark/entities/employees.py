@@ -21,8 +21,7 @@ Fidelity notes (SURVEY §7.4):
     per user as the deterministic stand-in (documented divergence).
 
 r12: doc assembled as an import-time SQL string + a single selectExpr
-(see members.py docstring for the rationale and the equivalence
-contract); the broadcast join is unchanged.
+(see members.py docstring for the rationale); the broadcast join is unchanged.
 """
 
 from __future__ import annotations

@@ -16,12 +16,10 @@ the code wins, SURVEY §5):
   keys{...truthiness-pruned...}
 
 r12: the doc expression is assembled as ONE SQL string at import time
-(functions/sql_text — the builders are 1:1 twins of the Column helpers
-they replace) and applied with a single ``selectExpr`` call: the
-hundreds of py4j round-trips the Column form paid per invocation were
-~40% of entity_org_payload_json's driver time (guide §1.2 — fix the
-per-query work). Results are bit-identical (same Catalyst expressions;
-certified by goldens + oracle parity + the payload roundtrip contract).
+from the functions/sql_text builders and applied with a single
+``selectExpr`` call: building it through the Column API paid hundreds
+of py4j round-trips per invocation, ~40% of entity_org_payload_json's
+driver time (guide §1.2 — fix the per-query work).
 """
 
 from __future__ import annotations

@@ -25,8 +25,7 @@ Fidelity (SURVEY §7.4):
     cloned for parity.
 
 r12: the doc projection is assembled as a SQL string + one selectExpr
-(joins unchanged) — see members.py for rationale and the equivalence
-contract.
+(joins unchanged) — see members.py for the rationale.
 """
 
 from __future__ import annotations

@@ -9,8 +9,7 @@ Narrow select, zero shuffles. Output doc per physician:
   truthy, physicians.py:84-91), keys{dispensary_id,id pruned}.
 
 r12: doc assembled as one import-time SQL string + a single selectExpr
-(see members.py docstring for the rationale and the equivalence
-contract).
+(see members.py docstring for the rationale).
 """
 
 from __future__ import annotations

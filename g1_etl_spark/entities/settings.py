@@ -23,7 +23,7 @@ sales_settings_taxes{taxes?}.
 r12: the one-row doc projection is assembled as a SQL string (built in
 Python, parsed once by the JVM) instead of ~300 py4j Column calls per
 invocation; the winner-row joins/windows stay in the Column API. See
-members.py for the rationale and the equivalence contract.
+members.py for the rationale.
 """
 
 from __future__ import annotations

@@ -9,8 +9,7 @@ licenceNumber? (group-deleted if ANY is NULL, vendors.py:77-80),
 phone[]?, address?, keys{dispensary_id,id,mmjvenu_id pruned}.
 
 r12: doc assembled as one import-time SQL string + a single selectExpr
-(see members.py docstring for the rationale and the equivalence
-contract).
+(see members.py docstring for the rationale).
 """
 
 from __future__ import annotations

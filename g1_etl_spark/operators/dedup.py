@@ -549,25 +549,10 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
     return verified
 
 
-def _assemble_simhash(vote_col) -> Column:
-    """OR together the sign bits of 64 vote columns into one bigint.
-
-    `vote_col(i)` must yield the (signed) vote total for bit i. Flat
-    64-term expression evaluated once per doc — cheap.
-    """
-    out = F.lit(0).cast("long")
-    for i in range(64):
-        out = out.bitwiseOR(
-            F.when(vote_col(i) > 0,
-                   F.lit(1 << i if i < 63 else -(1 << 63)).cast("long"))
-            .otherwise(F.lit(0).cast("long")))
-    return out
-
-
 def _assemble_simhash_arrow():
     """Arrow-vectorized signature assembly: (n, p0..p15) -> sh in one
-    numpy pass per batch — bit-identical to the expression form
-    (asserted in tests). The expression forms all pay ~1.2 s of
+    numpy pass per batch — bit-identical to simhash64 (asserted in
+    tests/test_dedup.py). The expression forms all pay ~1.2 s of
     PER-QUERY-INSTANCE codegen/planning for the 64-term tree (measured:
     same DataFrame object re-forced 0.31 s, fresh instance 1.9-2.5 s,
     branchless variant no better); the numpy path sidesteps the

@@ -896,7 +896,7 @@ def entity_products_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Whole-org payload (N6) nested-shape contract.
 #
 # entities/assemble.py builds the reference's single import document
-# (mmj/etl_import.py:21-58) driver-side for the JSON/Mongo sinks. This
+# (mmj/etl_import.py:21-58) driver-side for the JSON sink. This
 # plan assembles the SAME shape distributively — each entity list is a
 # sort_array(collect_list(struct)) fold, the org doc is one struct —
 # then runs the pinned-DDL to_json -> from_json roundtrip (the DDL

@@ -16,7 +16,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from g1_etl_spark.catalog import load_table
-from g1_etl_spark.functions.nested import truthiness_pruned_map
+from g1_etl_spark.functions import sql_text as sx
 from g1_etl_spark.plans.registry import register
 
 
@@ -47,17 +47,17 @@ from g1_etl_spark.plans.registry import register
 )
 def nested_keys_map(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    keys = truthiness_pruned_map({
-        "custkey": F.col("c_custkey"),
-        "nation": F.col("c_nationkey"),
-        "segment": F.col("c_mktsegment"),
-        "balance": F.col("c_acctbal"),
-        "flag": F.col("c_custkey") % 2,
+    keys = sx.truthiness_pruned_map({
+        "custkey": "c_custkey",
+        "nation": "c_nationkey",
+        "segment": "c_mktsegment",
+        "balance": "c_acctbal",
+        "flag": "c_custkey % 2",
     })
-    return c.select(
+    return c.selectExpr(
         "c_custkey",
-        F.to_json(keys).alias("keys_json"),
-        F.size(keys).alias("n_keys"),
+        f"to_json({keys}) AS keys_json",
+        f"size({keys}) AS n_keys",
     )
 
 

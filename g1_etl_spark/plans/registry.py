@@ -1,6 +1,6 @@
 """Query registry: name -> (Spark callable, optional DuckDB oracle SQL).
 
-Contract (driver-imposed, see /root/repo/__spark_entry__.py docstring):
+Contract (served through __spark_entry__.py, see its docstring):
   - fn(spark, sf_dir) -> DataFrame
   - oracle: ANSI SQL DuckDB can run against the same parquet tables,
     producing identical column NAMES and values (column order irrelevant —
@@ -9,10 +9,11 @@ Contract (driver-imposed, see /root/repo/__spark_entry__.py docstring):
 Cross-engine determinism rules used throughout the plan modules:
   - Sums over doubles are order-sensitive in IEEE float math, and Spark's
     partial aggregation order differs from DuckDB's. Any SUM/AVG over a
-    double therefore goes through an exact decimal: the input is cast to
-    DECIMAL per row (deterministic — the doubles are identical in both
-    engines), summed exactly, then cast back to DOUBLE. Both engines
-    produce bit-identical results.
+    double therefore goes through exact scaled-integer arithmetic
+    (plans/_util.py dsum/davg): each value is multiplied by 1e6 and
+    rounded to a BIGINT per row (deterministic — the doubles are
+    identical in both engines), summed exactly in integers, then divided
+    back to DOUBLE. Both engines produce bit-identical results.
   - COUNT family returns BIGINT in both engines.
   - Timestamps are emitted as DATE or formatted strings where feasible.
 """

@@ -1,5 +1,5 @@
-"""Oracle-backed queries exercising the scalar function library (C1–C26)
-on the driver's testdata tables.
+"""Oracle-backed queries exercising the scalar builders (C1–C26,
+functions/sql_text.py) on the testdata tables.
 
 The entity-specific semantics (category chains, role maps, truncating
 cents, 'None Smith' concat, Dr-prefix strip, …) are applied to synthetic
@@ -10,10 +10,9 @@ Unit tests on handcrafted edge rows live in tests/test_scalars.py.
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from g1_etl_spark.catalog import load_table
-from g1_etl_spark.functions import scalars as sc
+from g1_etl_spark.functions import sql_text as sx
 from g1_etl_spark.plans.registry import register
 
 
@@ -42,22 +41,21 @@ from g1_etl_spark.plans.registry import register
 def scalar_flags_enums(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
     # emp_active_c10 semantics: active==1 -> ACTIVE, NULL -> INACTIVE,
-    # 0 -> NULL. Synthesize active as NULL when %3==0 else %3 (1 or 2...
-    # use ==1 branch); map %3: 1->1(ACTIVE), 2->0(NULL path), 0->NULL(INACTIVE).
-    active = (F.when(F.col("o_custkey") % 3 == 1, 1)
-              .when(F.col("o_custkey") % 3 == 2, 0))
-    return o.select(
+    # 0 -> NULL. Synthesize active from o_custkey % 3:
+    # 1 -> 1 (ACTIVE), 2 -> 0 (NULL path), 0 -> NULL (INACTIVE).
+    active = ("CASE WHEN o_custkey % 3 = 1 THEN 1 "
+              "WHEN o_custkey % 3 = 2 THEN 0 END")
+    measurement = "CASE WHEN o_custkey % 3 = 1 THEN 1 ELSE 2 END"
+    confirmed = "CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END"
+    return o.selectExpr(
         "o_orderkey",
-        sc.true_or_false(F.col("o_orderkey") % 2).alias("flag_c1"),
-        sc.account_status_inverted(F.col("o_orderkey") % 2).alias("status_c2"),
-        sc.member_type(F.col("o_custkey") % 2).alias("member_type_c8"),
-        sc.assign_role(F.col("o_custkey") % 5).alias("role_c9"),
-        sc.employee_active_status(active).alias("emp_active_c10"),
-        sc.map_uom(F.when(F.col("o_custkey") % 3 == 1, 1).otherwise(2))
-        .alias("uom_c12"),
-        sc.vendor_account_status(
-            F.when(F.col("o_orderstatus") == "O", 1).otherwise(0))
-        .alias("vendor_status_c24"),
+        f"{sx.true_or_false('o_orderkey % 2')} AS flag_c1",
+        f"{sx.account_status_inverted('o_orderkey % 2')} AS status_c2",
+        f"{sx.member_type('o_custkey % 2')} AS member_type_c8",
+        f"{sx.assign_role('o_custkey % 5')} AS role_c9",
+        f"{sx.employee_active_status(active)} AS emp_active_c10",
+        f"{sx.map_uom(measurement)} AS uom_c12",
+        f"{sx.vendor_account_status(confirmed)} AS vendor_status_c24",
     )
 
 
@@ -89,20 +87,20 @@ def scalar_flags_enums(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_dates_money(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = load_table(spark, sf_dir, "orders")
-    uom = F.when(F.col("o_custkey") % 3 == 1, 2).otherwise(1)
-    return o.select(
+    uom = "CASE WHEN o_custkey % 3 = 1 THEN 2 ELSE 1 END"
+    return o.selectExpr(
         "o_orderkey",
-        sc.create_epoch("o_orderdate").alias("epoch_c3"),
-        sc.dollars_to_cents("o_totalprice").alias("cents_c4"),
-        sc.json_serial("o_orderdate").alias("iso_c5"),
-        sc.dob_default(F.lit(None).cast("timestamp")).alias("dob_c16"),
-        sc.employee_const_dob().alias("emp_dob_c17"),
-        sc.net_marijuana(uom, "o_totalprice").alias("net_mj_c18"),
-        sc.tax_percent("o_totalprice").alias("tax_pct_c19"),
-        sc.monthly_purchase_limit("o_custkey").alias("monthly_c20"),
-        sc.expiry_date_copy("o_orderdate").alias("expiry_c21"),
-        sc.identification_type().alias("id_type_c22"),
-        sc.physician_specialty().alias("specialty_c23"),
+        f"{sx.create_epoch('o_orderdate')} AS epoch_c3",
+        f"{sx.dollars_to_cents('o_totalprice')} AS cents_c4",
+        f"{sx.iso('o_orderdate')} AS iso_c5",
+        f"{sx.dob_default('CAST(NULL AS TIMESTAMP)')} AS dob_c16",
+        f"{sx.employee_const_dob()} AS emp_dob_c17",
+        f"{sx.net_marijuana(uom, 'o_totalprice')} AS net_mj_c18",
+        f"{sx.tax_percent('o_totalprice')} AS tax_pct_c19",
+        f"{sx.monthly_purchase_limit('o_custkey')} AS monthly_c20",
+        f"{sx.expiry_date_copy('o_orderdate')} AS expiry_c21",
+        f"{sx.identification_type()} AS id_type_c22",
+        f"{sx.physician_specialty()} AS specialty_c23",
     )
 
 
@@ -124,8 +122,9 @@ def scalar_dates_money(spark: SparkSession, sf_dir: str) -> DataFrame:
                 CASE WHEN c_custkey % 2 = 0 THEN 'Dr. ' || c_name
                      ELSE c_name END,
                 '(?i)^(Dr(?:.)?s|(?:Dr.?))', '')) AS clean_name_c14,
-           concat('https://images-production.example.com/customers/',
-                  CAST(c_custkey AS VARCHAR), '/', c_name, '.jpg') AS url_c15,
+           concat('https://wm-mmjmenu-images-production.s3.amazonaws.com',
+                  '/customers/', CAST(c_custkey AS VARCHAR), '/original/',
+                  c_name, '.jpg') AS url_c15,
            '42' AS org_id_c25,
            c_mktsegment AS notes_c26
     FROM customer
@@ -136,22 +135,19 @@ def scalar_dates_money(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def scalar_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = load_table(spark, sf_dir, "customer")
-    first = F.when(F.col("c_custkey") % 3 != 0, F.substring("c_name", 1, 8))
-    last = F.when(F.col("c_custkey") % 2 != 0, F.lit("Smith"))
-    dr_name = F.when(F.col("c_custkey") % 2 == 0,
-                     F.concat(F.lit("Dr. "), F.col("c_name"))
-                     ).otherwise(F.col("c_name"))
-    return c.select(
+    first = "CASE WHEN c_custkey % 3 != 0 THEN substring(c_name, 1, 8) END"
+    last = "CASE WHEN c_custkey % 2 != 0 THEN 'Smith' END"
+    dr_name = ("CASE WHEN c_custkey % 2 = 0 THEN concat('Dr. ', c_name) "
+               "ELSE c_name END")
+    url = sx.image_url("customers", "c_custkey", "concat(c_name, '.jpg')")
+    return c.selectExpr(
         "c_custkey",
-        sc.set_name(first, last, F.col("c_name")).alias("full_name_c6"),
-        sc.deterministic_email("c_custkey").alias("email_c7"),
-        sc.strip_dr_prefix(dr_name).alias("clean_name_c14"),
-        F.concat(
-            sc.s3_image_url("production", "customers", "c_custkey",
-                            F.concat(F.col("c_name"), F.lit(".jpg")))
-        ).alias("url_c15"),
-        sc.organization_id_lit(42).alias("org_id_c25"),
-        sc.account_status_notes("c_mktsegment").alias("notes_c26"),
+        f"{sx.set_name(first, last, 'c_name')} AS full_name_c6",
+        f"{sx.deterministic_email('c_custkey')} AS email_c7",
+        f"{sx.strip_dr_prefix(dr_name)} AS clean_name_c14",
+        f"{url} AS url_c15",
+        f"{sx.organization_id_lit(42)} AS org_id_c25",
+        f"{sx.account_status_notes('c_mktsegment')} AS notes_c26",
     )
 
 
@@ -194,11 +190,11 @@ def scalar_category_chain(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = load_table(spark, sf_dir, "part")
     cats = ["Cannabis", "Paraphernalia", "Tincture", "Prerolled", "Seeds",
             "Drinks", "Edibles", "Clone", "Concentrate", "Topicals", "Widget"]
-    cat = F.array(*[F.lit(x) for x in cats]).getItem(
-        (F.col("p_partkey") % 11).cast("int"))
-    sativa = (F.col("p_size") * 7) % 101
-    indica = (F.col("p_size") * 13) % 101
-    return p.select(
+    cat = ("array(" + ", ".join(f"'{x}'" for x in cats) + ")"
+           "[CAST(p_partkey % 11 AS INT)]")
+    sativa = "(p_size * 7) % 101"
+    indica = "(p_size * 13) % 101"
+    return p.selectExpr(
         "p_partkey",
-        sc.map_categories(cat, sativa, indica).alias("category_c13"),
+        f"{sx.map_categories(cat, sativa, indica)} AS category_c13",
     )

@@ -1,23 +1,16 @@
-"""Sinks — Spark-native rebuilds of the reference's K1/K2 outputs
-(SURVEY §2.1).
-
-  K1 JSON file sink   — etl_import.py:59-64: distributed df.write.json
-                        with ignoreNullFields (absent-key semantics), or
-                        the single-document payload via assemble.py.
-  K2 MongoDB sink     — utils.py:123-131: behind an import-try on the
-                        Mongo Spark connector; portable JSONL fallback.
-                        The reference's ObjectId collision-check loop
-                        (utils.py:134-146) is replaced by uuid() —
-                        collision probability is not a real concern.
+"""Sink — Spark-native rebuild of the reference's K1 JSON output
+(SURVEY §2.1): etl_import.py:59-64, a distributed df.write.json with
+ignoreNullFields (absent-key semantics); the single-document payload
+goes through entities/assemble.py. The reference's K2 MongoDB sink
+(utils.py:123-131) is not rebuilt: the JSON output is the product.
 
 At scale: entity outputs partition by dispensary_id; one JSON part per
-partition; the Mongo connector handles batching internally.
+partition.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 
 def write_entity_json(df: DataFrame, path: str,
@@ -30,36 +23,3 @@ def write_entity_json(df: DataFrame, path: str,
         writer = writer.partitionBy(partition_by)
     writer.json(path)
 
-
-def with_document_id(df: DataFrame, col: str = "_doc_id") -> DataFrame:
-    """Stable unique document id per row (replaces the reference's
-    Mongo ObjectId generate-and-retry loop)."""
-    return df.withColumn(col, F.expr("uuid()"))
-
-
-def write_mongo(df: DataFrame, uri: str, database: str,
-                collection: str) -> bool:
-    """K2: write to MongoDB when the Spark connector is on the
-    classpath; returns False (after writing a JSONL fallback is the
-    caller's choice) when it is not.
-
-    Only the connector-absent case is swallowed; genuine write failures
-    (auth, network, bad URI) re-raise so data loss is never silently
-    reported as the benign fallback.
-    """
-    _MISSING = ("DATA_SOURCE_NOT_FOUND", "Failed to find the data source",
-                "ClassNotFoundException")
-    try:
-        (df.write.format("mongodb")
-         .option("connection.uri", uri)
-         .option("database", database)
-         .option("collection", collection)
-         .mode("append")
-         .save())
-        return True
-    except Exception as exc:
-        if any(marker in str(exc) for marker in _MISSING):
-            # connector jar absent in this environment — callers fall
-            # back to write_entity_json
-            return False
-        raise

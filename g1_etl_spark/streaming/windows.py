@@ -52,16 +52,6 @@ def tumbling_counts(events: DataFrame, window: str = "1 hour",
                     "n_events", "total_value"))
 
 
-def sliding_counts(events: DataFrame, window: str = "1 hour",
-                   slide: str = "15 minutes",
-                   watermark: str = "2 hours") -> DataFrame:
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.window("ts", window, slide).alias("w"))
-            .agg(F.count(F.lit(1)).alias("n_events"))
-            .select(F.col("w.start").alias("window_start"), "n_events"))
-
-
 def session_aggregates(events: DataFrame, gap: str = "30 minutes",
                        watermark: str = "2 hours") -> DataFrame:
     """Native session windows (Spark 3.2+ session_window): a session

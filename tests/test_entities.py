@@ -275,6 +275,19 @@ def test_settings_golden(spark):
         "code": "state", "percent": 0.085, "type": "sales"}
 
 
+def test_settings_org_id_is_escaped(spark):
+    """The organization id comes from the command line; a quote or
+    backslash in it is data, not SQL."""
+    from g1_etl_spark.entities.settings import transform
+
+    dd = _df(spark, "dispensary_details", [
+        _row("dispensary_details", id=7, dispensary_id=1)])
+    empty = [_df(spark, t, []) for t in
+             ("memberships", "membership_prices", "red_flags", "taxes")]
+    out = docs(transform(dd, *empty, 1, "o'bri\\en"))
+    assert [d["organizationId"] for d in out] == ["o'bri\\en"]
+
+
 # ------------------------------------------------------------- menu items
 def test_menu_items_golden(spark):
     from g1_etl_spark.entities.menu_items import transform

@@ -1,5 +1,7 @@
-"""Unit tests for nested constructors — the reference's absent-key and
-truthiness-prune semantics (SURVEY §2.8, §7.4)."""
+"""Unit tests for the nested builders (functions/sql_text.py) — the
+reference's absent-key and truthiness-prune semantics (SURVEY §2.8,
+§7.4). Address structs and group-deleted fields are covered by the
+vendor golden in tests/test_entities.py."""
 
 from __future__ import annotations
 
@@ -7,18 +9,15 @@ import json
 
 from pyspark.sql import functions as F
 
-from g1_etl_spark.functions import nested as N
+from g1_etl_spark.functions import sql_text as sx
 
 
 def test_truthiness_pruned_map(spark):
     df = spark.createDataFrame(
         [(1, 0, 0.0, "", "x", None)],
         "a long, b long, c double, d string, e string, f string")
-    m = N.truthiness_pruned_map({
-        "a": F.col("a"), "b": F.col("b"), "c": F.col("c"),
-        "d": F.col("d"), "e": F.col("e"), "f": F.col("f"),
-    })
-    out = df.select(m.alias("m")).collect()[0]["m"]
+    m = sx.truthiness_pruned_map({k: k for k in "abcdef"})
+    out = df.select(F.expr(m).alias("m")).collect()[0]["m"]
     # falsy values (0, 0.0, '', NULL) dropped; truthy kept
     assert out == {"a": "1", "e": "x"}
 
@@ -31,36 +30,10 @@ def test_to_json_absent_key_semantics(spark):
     assert json.loads(j) == {"a": "x"}
 
 
-def test_address_struct_null_when_no_line1(spark):
-    df = spark.createDataFrame(
-        [("123 Red St.", "Toronto", "MN", "55812"),
-         (None, "Gone", "XX", "00000")],
-        "l string, c string, s string, z string")
-    col = N.address_struct(F.col("l"), F.col("c"), F.col("s"), F.col("z"))
-    rows = df.select(col.alias("addr")).collect()
-    assert rows[0]["addr"].asDict() == {
-        "line1": "123 Red St.", "city": "Toronto", "state": "MN",
-        "zip": "55812"}
-    assert rows[1]["addr"] is None
-
-
 def test_phone_array(spark):
     df = spark.createDataFrame([("705",), (None,)], "n string")
-    rows = df.select(N.phone_array(F.col("n")).alias("p")).collect()
+    rows = df.select(F.expr(sx.phone_array("n")).alias("p")).collect()
     assert rows[0]["p"][0].asDict() == {
         "name": "business", "number": "705", "default": True}
     assert rows[1]["p"] is None
 
-
-def test_group_nullable_struct(spark):
-    """licence/email/website dropped as a group if ANY is NULL
-    (mmj/entities/vendors.py:77-80)."""
-    df = spark.createDataFrame(
-        [("L1", "e@x.org", "http://x"), ("L1", None, "http://x")],
-        "lic string, em string, web string")
-    col = N.group_nullable_struct(
-        [F.col("lic"), F.col("em"), F.col("web")],
-        F.struct("lic", "em", "web"))
-    rows = df.select(col.alias("g")).collect()
-    assert rows[0]["g"] is not None
-    assert rows[1]["g"] is None
