@@ -14,9 +14,10 @@ mmj/server.py:6-11 POST /import/extract form params).
          partition) — the 100 TB path where a single driver-side
          document is not the product
 
---data points at a directory of {table}.parquet sources (FIXTURES.md §A
-schemas); absent tables become empty frames with the explicit schema, so
-the command runs end-to-end on partial fixtures.
+--data points at a directory of {table}.parquet sources, read with the
+declared schemas (FIXTURES.md §A, entities/schemas.py): absent tables
+become empty frames and absent columns read as NULL, so the command runs
+end-to-end on partial fixtures.
 """
 
 from __future__ import annotations
@@ -27,58 +28,25 @@ import sys
 
 from pyspark.sql import DataFrame, SparkSession
 
-from g1_etl_spark.entities import (employees as emp, members as mem,
-                                   menu_items as prod, physicians as phys,
-                                   settings as sett, vendors as vend)
 from g1_etl_spark.entities import schemas as S
-from g1_etl_spark.entities.assemble import build_payload, write_payload_json
+from g1_etl_spark.entities.assemble import (ENTITIES, build_payload,
+                                            write_payload_json)
 from g1_etl_spark.sources.sinks import write_entity_json
 
 
 def load_sources(spark: SparkSession, data_dir: str | None
                  ) -> dict[str, DataFrame]:
-    """Each mmj source table: parquet when present, else an empty frame
-    with the explicit schema (the input contract, schemas.py)."""
+    """Each mmj source table read with its declared schema (the input
+    contract, schemas.py): parquet when present, with absent columns
+    read as NULL, else an empty frame."""
     out = {}
     for name, schema in S.ALL_SCHEMAS.items():
         path = os.path.join(data_dir, f"{name}.parquet") if data_dir else None
         if path and os.path.exists(path):
-            out[name] = spark.read.parquet(path)
+            out[name] = spark.read.schema(schema).parquet(path)
         else:
             out[name] = spark.createDataFrame([], schema)
     return out
-
-
-def entity_frame(sources: dict[str, DataFrame], entity: str,
-                 dispensary_id: int, organization_id,
-                 debug: bool = False) -> DataFrame:
-    """One entity pipeline -> (_id, doc) frame (reference extract()
-    call shapes, etl_import.py:10-16)."""
-    builders = {
-        "members": lambda: mem.transform(
-            sources["customers"], dispensary_id, organization_id),
-        "employees": lambda: emp.transform(
-            sources["users"], sources["dispensary_users"], dispensary_id,
-            organization_id, fake_email=True, debug=debug),
-        "products": lambda: prod.transform(
-            sources["menu_items"], sources["categories"],
-            sources["menu_item_prices"],
-            sources["menu_item_weedmaps_integrations"],
-            sources["dispensary_details"], dispensary_id, organization_id,
-            debug=debug),
-        "vendors": lambda: vend.transform(
-            sources["vendors"], dispensary_id, organization_id),
-        "physicians": lambda: phys.transform(
-            sources["physicians"], dispensary_id, organization_id),
-        "settings": lambda: sett.transform(
-            sources["dispensary_details"], sources["memberships"],
-            sources["membership_prices"], sources["red_flags"],
-            sources["taxes"], dispensary_id, organization_id, debug=debug),
-    }
-    if entity not in builders:
-        raise SystemExit(f"unknown entity {entity!r}; "
-                         f"choose from {sorted(builders)}")
-    return builders[entity]()
 
 
 def main(argv: list[str] | None = None) -> str:
@@ -96,7 +64,7 @@ def main(argv: list[str] | None = None) -> str:
     common(sub.add_parser("extract", help="full org payload -> mmj-{org}.json"))
     pe = sub.add_parser("entity", help="one entity -> distributed json")
     common(pe)
-    pe.add_argument("--entity", required=True)
+    pe.add_argument("--entity", required=True, choices=sorted(ENTITIES))
     ps = sub.add_parser(
         "sql", help="ad-hoc SQL over the testdata tables (temp views)")
     ps.add_argument("query", help="SQL text; tables region/nation/.../"
@@ -126,8 +94,8 @@ def main(argv: list[str] | None = None) -> str:
         out_path = os.path.join(args.out, f"mmj-{args.org}.json")
         write_payload_json(payload, out_path)
     else:
-        df = entity_frame(sources, args.entity, args.dispensary, args.org,
-                          debug=args.debug)
+        df = ENTITIES[args.entity](sources, args.dispensary, args.org,
+                                   args.debug)
         out_path = os.path.join(args.out, f"{args.entity}-{args.org}.json")
         write_entity_json(df.select("doc.*"), out_path)
     print(out_path)

@@ -69,7 +69,7 @@ def phone_array(number: str, name: str = "business") -> str:
 def named_struct(*pairs: tuple[str, str]) -> str:
     """Struct of (field name, expression) pairs; NULL fields vanish from
     to_json output (absent-key semantics, F4)."""
-    inner = ", ".join(f"'{n}', {e}" for n, e in pairs)
+    inner = ", ".join(f"{_sql_str(n)}, {e}" for n, e in pairs)
     return f"named_struct({inner})"
 
 

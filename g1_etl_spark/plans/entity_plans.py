@@ -895,11 +895,11 @@ def entity_products_json(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ------------------------------------------------------------------
 # Whole-org payload (N6) nested-shape contract.
 #
-# entities/assemble.py builds the reference's single import document
-# (mmj/etl_import.py:21-58) driver-side for the JSON sink. This
-# plan assembles the SAME shape distributively — each entity list is a
-# sort_array(collect_list(struct)) fold, the org doc is one struct —
-# then runs the pinned-DDL to_json -> from_json roundtrip (the DDL
+# The reference's single import document (mmj/etl_import.py:21-58) is
+# built by the product's own fold, entities/assemble.payload_doc (each
+# entity list a sort_array(collect_list(struct)) fold, the org doc one
+# struct), over entity frames derived from the testdata tables. This
+# plan then runs the pinned-DDL to_json -> from_json roundtrip (the DDL
 # literal below is the contract, NOT derived from the live pipeline)
 # and flat-projects: members re-exploded through the shared
 # _members_flat_cols projection (full per-row value coverage against
@@ -968,78 +968,28 @@ _ORG_PAYLOAD_DDL = (
     f"physicians:{_SUMMARY_ENTITY_DDL}>>")
 
 
-def _org_payload_doc(spark: SparkSession, sf_dir: str,
-                     materialize=None) -> DataFrame:
-    """One-row (doc) frame holding the whole-org payload struct.
-
-    Each entity output folds to a single row via sort_array(
-    collect_list(struct(_id, doc))) — ids are unique per entity, so the
-    sort is total and the list order matches assemble.py's ORDER BY
-    _id. The five one-row frames combine by crossJoin (1x1 rows — the
-    BroadcastNestedLoopJoins and single-partition folds here are
-    payload-boundary shapes, exempted in the plan lint; at 100 TB the
-    per-entity frames write straight to partitioned sinks instead,
-    entities/assemble.py docstring).
-
-    ``materialize`` (r11): an optional hook applied to the list of six
-    independent per-entity BUILDERS (zero-arg callables returning the
-    one-row fold frame) — the registered query passes a concurrent
-    build + eager-localCheckpoint (guide §2.6 overlap-independent-
-    jobs). Profiling at sf0.1 found the assembly is driver-bound, not
-    executor-bound: constructing the six entity expression trees is
-    ~3-4 s of sequential py4j round-trips while the actual jobs are
-    ~2 s — so the hook must wrap CONSTRUCTION, not just execution.
-    Default None keeps the fully lazy single-plan form the pre-
-    checkpoint lint inspects."""
+def _org_payload_doc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One-row (doc) frame holding the whole-org payload struct: the
+    product's own fold (entities/assemble.payload_doc) over the derived
+    entity frames, as one lazy plan — the form the pre-checkpoint plan
+    lint inspects."""
     from g1_etl_spark.entities import (employees as emp, members as mem,
                                        physicians as phys,
                                        vendors as vend)
+    from g1_etl_spark.entities.assemble import payload_doc
 
-    def fold(df: DataFrame, name: str) -> DataFrame:
-        lst = F.sort_array(F.collect_list(F.struct(
-            F.col("_id").alias("k"), F.col("doc").alias("d"))))
-        return df.agg(F.transform(lst, lambda x: x["d"]).alias(name))
-
-    builders = [
-        lambda: fold(_settings_doc(spark, sf_dir), "settings"),
-        lambda: fold(emp.transform(_users_like(spark, sf_dir),
+    frames = {
+        "settings": _settings_doc(spark, sf_dir),
+        "employees": emp.transform(_users_like(spark, sf_dir),
                                    _dispensary_users_like(spark, sf_dir),
                                    1, 420, fake_email=False, debug=False),
-                     "employees"),
-        lambda: fold(mem.transform(_customers_like(spark, sf_dir),
-                                   1, 420), "members"),
-        lambda: fold(_products_doc(spark, sf_dir), "products"),
-        lambda: fold(vend.transform(_vendors_like(spark, sf_dir),
-                                    1, 420), "vendors"),
-        lambda: fold(phys.transform(_physicians_like(spark, sf_dir),
-                                    1, 420), "physicians"),
-    ]
-    if materialize is not None:
-        frames = materialize(builders)
-    else:
-        frames = [b() for b in builders]
-    settings, employees, members, products, vendors, physicians = frames
-
-    row = (settings.crossJoin(employees).crossJoin(members)
-           .crossJoin(products).crossJoin(vendors).crossJoin(physicians))
-    zero = F.struct(F.lit(0).cast("long").alias("valid"),
-                    F.lit(0).cast("long").alias("invalid"))
-    return row.select(F.struct(
-        F.lit("420").alias("organizationId"),
-        F.lit("mmjMenu").alias("source"),
-        F.lit(_ORG_EXTRACTED_EPOCH).cast("long").alias("extractedDate"),
-        F.lit(False).alias("validated"),
-        F.lit(False).alias("imported"),
-        F.element_at(F.col("settings"), 1).alias("settings"),
-        F.col("employees").alias("employees"),
-        F.col("members").alias("members"),
-        F.col("products").alias("products"),
-        F.col("vendors").alias("vendors"),
-        F.col("physicians").alias("physicians"),
-        F.struct(*[zero.alias(e) for e in
-                   ("members", "employees", "products", "vendors",
-                    "physicians")]).alias("summary"),
-    ).alias("doc"))
+        "members": mem.transform(_customers_like(spark, sf_dir), 1, 420),
+        "products": _products_doc(spark, sf_dir),
+        "vendors": vend.transform(_vendors_like(spark, sf_dir), 1, 420),
+        "physicians": phys.transform(_physicians_like(spark, sf_dir),
+                                     1, 420),
+    }
+    return payload_doc(frames, 420, _ORG_EXTRACTED_EPOCH)
 
 
 # composed from the sibling oracles so the payload contract can never
@@ -1077,32 +1027,14 @@ _ORG_PAYLOAD_ORACLE = f"""
 """
 
 
-def _org_payload_roundtrip(spark: SparkSession, sf_dir: str,
-                           materialize=None) -> DataFrame:
+def _org_payload_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pre-checkpoint roundtrip plan — kept separate so the plan-lint
     can explain the full six-pipeline assembly (the registered query
     checkpoints it, which truncates the visible plan at an RDD scan;
     tests/test_plan_quality.py lints THIS frame for the upstream)."""
-    return _org_payload_doc(spark, sf_dir, materialize=materialize).select(
+    return _org_payload_doc(spark, sf_dir).select(
         F.from_json(F.to_json(F.col("doc")), _ORG_PAYLOAD_DDL)
         .alias("doc"))
-
-
-def _checkpoint_concurrently(builders: list) -> list:
-    """Build AND eagerly localCheckpoint each independent one-row
-    entity fold from a driver thread pool so that both the py4j
-    expression construction (GIL released on every socket round-trip)
-    and the Spark jobs overlap (guide §2.6): the six pipelines share
-    no inputs, and the sequential form is driver-bound — ~3-4 s of
-    plan construction plus ~2 s of tiny-stage jobs at sf0.1. Results
-    are unchanged — each fold's one-row output is deterministic
-    (sort_array over unique ids) and checkpointing is a no-op on
-    content."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        return list(pool.map(
-            lambda b: b().localCheckpoint(eager=True), builders))
 
 
 @register(
@@ -1130,12 +1062,8 @@ def entity_org_payload_json(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-run the whole six-pipeline assembly (no CSE across branches),
     # and carrying the full payload struct down the exploded rows for
     # the probe columns would materialize the whole document once PER
-    # MEMBER (measured 32 s -> ~6 s at sf0.1). r11: the six entity
-    # folds materialize CONCURRENTLY (guide §2.6) — they are
-    # independent pipelines bound by tiny-stage latency, not data
-    rt = (_org_payload_roundtrip(
-        spark, sf_dir, materialize=_checkpoint_concurrently)
-        .localCheckpoint(eager=True))
+    # MEMBER (measured 32 s -> ~6 s at sf0.1)
+    rt = _org_payload_roundtrip(spark, sf_dir).localCheckpoint(eager=True)
     p = F.col("doc")
     probes = rt.select(
         p["organizationId"].alias("org_id"),

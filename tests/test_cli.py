@@ -13,7 +13,7 @@ from g1_etl_spark.entities import schemas as S
 TS1 = datetime.datetime(2020, 1, 2, 3, 4, 5)
 
 
-def _write_customers(spark, data_dir):
+def _write_customers(spark, data_dir, drop=()):
     defaults = {f.name: None for f in S.CUSTOMERS.fields}
     rows = [dict(defaults, id=1, dispensary_id=1, name="Solo",
                  license_type=1, created_at=TS1, updated_at=TS1),
@@ -22,13 +22,16 @@ def _write_customers(spark, data_dir):
     df = spark.createDataFrame(
         [tuple(r[f.name] for f in S.CUSTOMERS.fields) for r in rows],
         S.CUSTOMERS)
-    df.write.mode("overwrite").parquet(str(data_dir / "customers.parquet"))
+    df.drop(*drop).write.mode("overwrite").parquet(
+        str(data_dir / "customers.parquet"))
 
 
 def test_cli_extract_payload(spark, tmp_path):
     data, out = tmp_path / "data", tmp_path / "out"
     data.mkdir()
-    _write_customers(spark, data)
+    # sources are read with the declared schema: a parquet file without
+    # the nullable registry_no column still extracts, with no mmjCard
+    _write_customers(spark, data, drop=("registry_no",))
     path = main(["extract", "--dispensary", "1", "--org", "420",
                  "--data", str(data), "--out", str(out)])
     assert os.path.basename(path) == "mmj-420.json"
@@ -36,6 +39,7 @@ def test_cli_extract_payload(spark, tmp_path):
     assert payload["organizationId"] == "420"
     # dispensary filter applied: only the dispensary-1 customer survives
     assert [m["name"] for m in payload["members"]] == ["Solo"]
+    assert "mmjCard" not in payload["members"][0]
     assert payload["products"] == [] and payload["physicians"] == []
     assert payload["summary"]["members"] == {"valid": 0, "invalid": 0}
 

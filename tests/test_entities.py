@@ -369,8 +369,11 @@ def test_payload_assembly(spark):
     from g1_etl_spark.entities.assemble import build_payload
 
     empty = {name: _df(spark, name, []) for name in S.ALL_SCHEMAS}
+    # the lower id comes second: members must come back in id order
     customers = _df(spark, "customers", [
-        _row("customers", id=1, dispensary_id=1, name="Solo",
+        _row("customers", id=2, dispensary_id=1, name="Solo",
+             license_type=1, created_at=TS1, updated_at=TS1),
+        _row("customers", id=1, dispensary_id=1, name="Early",
              license_type=1, created_at=TS1, updated_at=TS1)])
     sources = dict(empty, customers=customers)
     payload = build_payload(sources, 1, 420, extracted_date=1700000000)
@@ -378,8 +381,7 @@ def test_payload_assembly(spark):
     assert payload["source"] == "mmjMenu"
     assert payload["extractedDate"] == 1700000000
     assert payload["validated"] is False and payload["imported"] is False
-    assert len(payload["members"]) == 1
-    assert payload["members"][0]["name"] == "Solo"
+    assert [m["name"] for m in payload["members"]] == ["Early", "Solo"]
     assert payload["products"] == [] and payload["vendors"] == []
     assert payload["settings"] == {}
     assert payload["summary"]["members"] == {"valid": 0, "invalid": 0}

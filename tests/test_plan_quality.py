@@ -224,7 +224,7 @@ _BNLJ_OK = {
     # k-row centroid frame cross-joined into the scoring pass (k=4)
     "sim_kmeans_exact",
     # whole-org payload: six ONE-ROW entity folds crossJoined at the
-    # payload boundary (entity_plans._org_payload_doc docstring)
+    # payload boundary (entities/assemble.payload_doc docstring)
     "entity_org_payload_json",
     # one-row sketch-estimate x one-row exact-count scalar crosses
     # (the KMV frames themselves are k<=256 rows, broadcast semi-joins)

@@ -142,7 +142,8 @@ def test_net_marijuana_c18(spark):
 
 def test_settings_and_member_scalars_c19_to_c26(spark):
     """C19–C23 and C26 in one select: NULL rows, int(2.6*2)=5 (multiply
-    first, then truncate — not int(2.6)*2=4), constants, passthrough."""
+    first, then truncate — not int(2.6)*2=4), constants, passthrough;
+    plus a named_struct whose field name holds a quote."""
     exp = dt.datetime(2017, 11, 23)
     df = spark.createDataFrame(
         [(8.5, 2.6, exp, "late"), (None, None, None, None)],
@@ -153,10 +154,12 @@ def test_settings_and_member_scalars_c19_to_c26(spark):
         F.expr(sx.expiry_date_copy("expires")),
         F.expr(sx.identification_type()),
         F.expr(sx.physician_specialty()),
-        F.expr(sx.account_status_notes("reason"))).collect()]
+        F.expr(sx.account_status_notes("reason")),
+        F.to_json(F.expr(sx.named_struct(("it's", "reason"))))).collect()]
     assert out == [
-        (0.085, 5, exp, "Drivers License", "General", "late"),
-        (None, None, None, "Drivers License", "General", None)]
+        (0.085, 5, exp, "Drivers License", "General", "late",
+         '{"it\'s":"late"}'),
+        (None, None, None, "Drivers License", "General", None, "{}")]
 
 
 def test_vendor_account_status_c24(spark):
