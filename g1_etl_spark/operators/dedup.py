@@ -2,9 +2,9 @@
 superset surface (BASELINE.json north star; no reference analog).
 
 Four families, all expressed as compositions of built-in DataFrame ops
-(no row-at-a-time Python UDFs anywhere; the minhash signature uses one
-Arrow-batched pandas UDF on the hot path with a bit-identical
-expression fallback):
+(no row-at-a-time Python UDFs anywhere; the minhash and simhash
+signatures each use one Arrow-batched pandas UDF, bit-identical to the
+expression forms the tests compare them against):
 
   exact_dedup          hash-groupBy on (normalized) content
   ngram_jaccard_pairs  inverted-index join on word n-grams -> exact jaccard
@@ -25,23 +25,10 @@ from __future__ import annotations
 
 import random
 
+import numpy as np
+import pandas as pd
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
-
-# The Arrow signature path is an optional fast path; every dedup
-# operator must keep working (impl="hof") without the pandas stack.
-# pyarrow is probed too: pandas_udf fails only at EXECUTION time when
-# Arrow is missing, which would turn a soft dependency into a runtime
-# surprise.
-try:  # pragma: no cover - env-dependent
-    import numpy as np
-    import pandas as pd
-    import pyarrow  # noqa: F401
-    _ARROW_OK = True
-except ImportError:  # pragma: no cover - env-dependent
-    np = None  # type: ignore[assignment]
-    pd = None  # type: ignore[assignment]
-    _ARROW_OK = False
 
 # 31-bit Mersenne prime — (a*h+b) % P universal hashing on xxhash64 values
 # reduced into [0, P). 31 bits keeps a*h < 2^62, inside int64 (ANSI mode
@@ -419,7 +406,8 @@ def base_hashes(grams: Column) -> Column:
 
 
 def base_hashes_from_longs(gram_hashes: Column) -> Column:
-    """Already-hashed (long) shingles reduced into [0, P)."""
+    """Already-hashed (long) shingles reduced into [0, P) — the
+    expression reference for minhash_signature_arrow's first step."""
     return F.transform(gram_hashes, lambda g: F.abs(g) % _P)
 
 
@@ -430,6 +418,9 @@ def minhash_from_hashes(hashes: Column, num_hashes: int = 32,
     Permutations = (a*h+b) mod P with fixed-seed params — reproducible.
     Bind base_hashes() to a column first: HOFs are interpreted, so an
     embedded expression would re-hash every shingle num_hashes times.
+    The expression reference that tests/test_dedup.py checks
+    minhash_signature_arrow against bit for bit; minhash_lsh_pairs
+    runs the Arrow kernel.
     """
     mins = [
         F.array_min(F.transform(
@@ -450,10 +441,10 @@ def minhash_signature_arrow(num_hashes: int = 32, seed: int = 42):
     minima in one numpy pass per Arrow batch — bit-identical to
     minhash_from_hashes(base_hashes_from_longs(...)) (integer-exact:
     np.abs/np.fmod reproduce Java's abs/% semantics, and a*h+b stays
-    under 2^62 for the 31-bit modulus). Replaces (1 + num_hashes)
-    interpreted HOF array passes and, with them, the extra
-    localCheckpoint barrier that guarded the base-hash column from
-    CollapseProject re-inlining into every permutation expression.
+    under 2^62 for the 31-bit modulus). One pass instead of
+    (1 + num_hashes) interpreted HOF array passes, so no barrier is
+    needed to keep CollapseProject from re-inlining the base-hash
+    column into every permutation expression.
 
     Precondition: every gram array is non-empty (gram_hashes_from_words
     guarantees a whole-text fallback gram)."""
@@ -484,8 +475,7 @@ def minhash_signature_arrow(num_hashes: int = 32, seed: int = 42):
 def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
                       id_col: str = "doc_id", n: int = 3,
                       num_hashes: int = 32, bands: int = 8,
-                      threshold: float = 0.5, seed: int = 42,
-                      impl: str = "arrow") -> DataFrame:
+                      threshold: float = 0.5, seed: int = 42) -> DataFrame:
     """MinHash-LSH near-dup pairs with exact-jaccard verification.
 
     Stage 1 (narrow): shingle + signature per doc.
@@ -495,29 +485,15 @@ def minhash_lsh_pairs(df: DataFrame, text_col: str = "text",
              (array_intersect/union on the already-computed gram arrays,
              joined back by id — touches candidates only).
 
-    impl="arrow" computes signatures with one numpy pass per Arrow
-    batch (bit-identical to the HOF form, asserted in tests) and needs
-    a single checkpoint; impl="hof" is the dependency-free expression
-    fallback with a second barrier guarding the base-hash column from
-    CollapseProject re-inlining (HOFs get no CSE).
+    Signatures come from minhash_signature_arrow: one numpy pass per
+    Arrow batch, bit-identical to the minhash_from_hashes expression
+    form (asserted in tests/test_dedup.py).
     """
     rows = num_hashes // bands
-    if impl == "arrow" and not _ARROW_OK:
-        impl = "hof"  # automatic dependency-free fallback
     # Grams are xxhash64 longs (gram_hashes_from_words) — shingle
     # strings are never materialized here.
-    hashed = _gram_hashes_projected(df, text_col, id_col, n)
-    if impl == "arrow":
-        docs = hashed.withColumn(
-            "sig", minhash_signature_arrow(num_hashes, seed)(F.col("grams")))
-    else:
-        hashed = (hashed
-                  .withColumn("hs", base_hashes_from_longs(F.col("grams")))
-                  .localCheckpoint(eager=True))
-        docs = (hashed
-                .withColumn("sig", minhash_from_hashes(F.col("hs"),
-                                                       num_hashes, seed))
-                .drop("hs"))
+    docs = _gram_hashes_projected(df, text_col, id_col, n).withColumn(
+        "sig", minhash_signature_arrow(num_hashes, seed)(F.col("grams")))
     # eager checkpoint, not lazy cache: the signature frame feeds FOUR
     # consumers (both band-join sides + both verify joins), which race
     # to materialize a lazy cache and can each recompute the shuffle-
@@ -576,8 +552,7 @@ def _assemble_simhash_arrow():
 
 
 def simhash_signatures(df: DataFrame, text_col: str = "text",
-                       id_col: str = "doc_id",
-                       impl: str = "arrow") -> DataFrame:
+                       id_col: str = "doc_id") -> DataFrame:
     """(d, sh): single-pass 64-bit SimHash per document.
 
     Explode tokens, xxhash64 each ONCE, then one codegen'd hash-aggregate
@@ -585,16 +560,17 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
     long carrying 16-bit lanes at offsets 0/16/32/48 for bits j, j+16,
     j+32, j+48) plus a token count; bit i of the signature is set iff
     ``2*ones_i > n`` — identical to the ±1 vote tally (equality with
-    the expression-form simhash64 is asserted in tests/test_dedup.py).
-    The groupBy(doc) shuffle is cut to one row per doc per input
-    partition by map-side partial aggregation; every expression stays
-    inside whole-stage codegen — unlike simhash64, which re-traverses
-    the token array 64× interpreted. Packing matters twice: the
-    generated aggregate is 4× narrower (64→16 accumulators; the
-    unpacked 64×SUM form cost ~1.5 s more per session in Janino
-    compile + first eval at sf0.1, and the original 64×CASE-WHEN form
-    ~2.3 s), and the partial-agg shuffle row shrinks from 65 to 17
-    longs per doc per input partition.
+    the expression-form simhash64 is asserted in tests/test_dedup.py);
+    _assemble_simhash_arrow turns the 17 counters into the signature in
+    one numpy pass per Arrow batch. The groupBy(doc) shuffle is cut to
+    one row per doc per input partition by map-side partial
+    aggregation; every aggregate expression stays inside whole-stage
+    codegen — unlike simhash64, which re-traverses the token array 64×
+    interpreted. Packing matters twice: the generated aggregate is 4×
+    narrower (64→16 accumulators; the unpacked 64×SUM form cost ~1.5 s
+    more per session in Janino compile + first eval at sf0.1, and the
+    original 64×CASE-WHEN form ~2.3 s), and the partial-agg shuffle row
+    shrinks from 65 to 17 longs per doc per input partition.
 
     Lane bound: a 16-bit lane overflows at 65,536 tokens in ONE
     document (~¼ MB of text as a single doc). Corpus pipelines chunk
@@ -615,52 +591,19 @@ def simhash_signatures(df: DataFrame, text_col: str = "text",
         packs.append(F.sum(e).alias(f"_p{j}"))
     grouped = hashed.groupBy("d").agg(F.count(F.lit(1)).alias("_n"), *packs)
 
-    if impl == "arrow" and _ARROW_OK:
-        assemble = _assemble_simhash_arrow()
-        return grouped.select(
-            "d", assemble(F.col("_n"),
-                          *[F.col(f"_p{j}") for j in range(16)])
-            .alias("sh"))
-
-    def _ones(j: int, lane: int):
-        return (F.shiftright(F.col(f"_p{j}"), 16 * lane)
-                .bitwiseAND(F.lit((1 << 16) - 1)))
-
-    # Dependency-free expression fallback. Assemble WORD-WISE (four
-    # 16-term OR chains recombined by shifts) rather than one 64-term
-    # chain — smaller generated methods. Bit 63 is the long sign bit,
-    # so the top word's MSB recombines through the negative literal
-    # instead of an overflowing shift (ANSI mode).
-    words = []
-    for lane in range(4):
-        w = F.lit(0).cast("long")
-        for j in range(16):
-            w = w.bitwiseOR(
-                F.when(_ones(j, lane) * 2 > F.col("_n"),
-                       F.lit(1 << j).cast("long"))
-                .otherwise(F.lit(0).cast("long")))
-        words.append(w.alias(f"_w{lane}"))
-    sh = (F.col("_w0")
-          .bitwiseOR(F.shiftleft(F.col("_w1"), 16))
-          .bitwiseOR(F.shiftleft(F.col("_w2"), 32))
-          .bitwiseOR(
-              F.when(F.shiftright(F.col("_w3"), 15)
-                     .bitwiseAND(F.lit(1)) == 1,
-                     F.shiftleft(F.col("_w3").bitwiseAND(F.lit(0x7FFF)),
-                                 48)
-                     .bitwiseOR(F.lit(-(1 << 63)).cast("long")))
-              .otherwise(F.shiftleft(F.col("_w3"), 48))))
-    return grouped.select("d", *words).select("d", sh.alias("sh"))
+    assemble = _assemble_simhash_arrow()
+    return grouped.select(
+        "d", assemble(F.col("_n"), *[F.col(f"_p{j}") for j in range(16)])
+        .alias("sh"))
 
 
 def simhash64(tokens: Column) -> Column:
     """64-bit SimHash of an array-of-tokens column, as bigint.
 
     Expression form (nested higher-order functions, no shuffle): 64
-    interpreted traversals of the token array. Fine for short arrays /
-    already-aggregated rows; corpus-scale callers should prefer
-    simhash_signatures (one codegen'd pass). Both produce identical
-    signatures (asserted in tests/test_dedup.py).
+    interpreted traversals of the token array. The reference that
+    tests/test_dedup.py checks simhash_signatures against (identical
+    signatures); corpus-scale callers use simhash_signatures.
     """
     hashes = F.transform(tokens, lambda t: F.xxhash64(t))
     # shift amounts must be literal ints (shiftleft/shiftright take no
@@ -991,6 +934,8 @@ def ngram_jaccard_prefix_pairs(df: DataFrame, text_col: str = "text",
     # two g-partitioned sides. A count window over the same g
     # partitioning produces the identical _df with ONE exchange and no
     # join (the posting-list count is the whole-partition frame).
+    # Invariant: g is never NULL (xxhash64 never returns NULL and
+    # collect_set drops NULLs), so no NULL-gram partition can form.
     ow = W.partitionBy("d").orderBy("_df", "g")
     plen = (F.col("sz") - F.ceil(F.lit(threshold) * F.col("sz")) + 1)
     prefix = (ex.withColumn("_df",

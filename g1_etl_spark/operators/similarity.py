@@ -161,9 +161,9 @@ def lsh_signature(vec: Column, dim: int, planes: int = 16,
 
     Expression (HOF) form: `planes` interpreted array passes per row and
     a planes×dim literal tree that Catalyst must analyze — correct but
-    heavy. The hot path uses lsh_signature_arrow (identical bit
-    semantics, one numpy matmul per Arrow batch); this form remains the
-    dependency-free fallback.
+    heavy. The operators use lsh_signature_arrow (identical bit
+    semantics, one numpy matmul per Arrow batch); this form is the
+    reference that tests/test_similarity.py checks it against.
     """
     sig = F.lit(0).cast("long")
     for i, plane in enumerate(_hyperplanes(dim, planes, seed)):
@@ -248,7 +248,7 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
              dim: int = 64, planes: int = 16, bands: int = 4,
              id_col: str = "vec_id", vec_col: str = "embedding",
              q_id_col: str = "q_id", q_vec_col: str = "q_vec",
-             impl: str = "arrow", probe_flips: int = 1) -> DataFrame:
+             probe_flips: int = 1) -> DataFrame:
     """Approximate top-k: candidates = corpus vectors sharing >=1 LSH band
     with the query (multi-probed by default — the query side also visits
     every Hamming-1 bucket per band, lifting mid-similarity recall from
@@ -256,19 +256,10 @@ def lsh_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
     proportional candidate-verify increase); exact cosine + window top-k
     on candidates only."""
     band_bits = planes // bands
-    if impl == "arrow":
-        sig_udf = lsh_signature_arrow(dim, planes)
-        c = corpus.select(F.col(id_col),
-                          sig_udf(F.col(vec_col)).alias("sig"))
-        q = queries.select(F.col(q_id_col),
-                           sig_udf(F.col(q_vec_col)).alias("qsig"))
-    else:
-        c = corpus.select(
-            F.col(id_col),
-            lsh_signature(F.col(vec_col), dim, planes).alias("sig"))
-        q = queries.select(
-            F.col(q_id_col),
-            lsh_signature(F.col(q_vec_col), dim, planes).alias("qsig"))
+    sig_udf = lsh_signature_arrow(dim, planes)
+    c = corpus.select(F.col(id_col), sig_udf(F.col(vec_col)).alias("sig"))
+    q = queries.select(F.col(q_id_col),
+                       sig_udf(F.col(q_vec_col)).alias("qsig"))
     cb = _banded(c, "sig", bands, band_bits, "bk")
     qb = _banded(q, "qsig", bands, band_bits, "qbk",
                  probe_flips=probe_flips)
@@ -660,7 +651,6 @@ def ivf_pq_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
 def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95,
                          dim: int = 64, planes: int = 16, bands: int = 4,
                          id_col: str = "vec_id", vec_col: str = "embedding",
-                         impl: str = "arrow",
                          probe_flips: int = 0) -> DataFrame:
     """Embedding near-duplicate pairs via LSH bucketing + exact verify.
 
@@ -680,10 +670,7 @@ def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95,
     and the tail vanishes; for low-dim corpora raise the threshold with
     corpus size."""
     band_bits = planes // bands
-    if impl == "arrow":
-        sig_expr = lsh_signature_arrow(dim, planes)(F.col(vec_col))
-    else:
-        sig_expr = lsh_signature(F.col(vec_col), dim, planes)
+    sig_expr = lsh_signature_arrow(dim, planes)(F.col(vec_col))
     c = corpus.select(F.col(id_col).alias("d"), sig_expr.alias("sig"))
     b = _banded(c, "sig", bands, band_bits, "bk")
     bp = (_banded(c, "sig", bands, band_bits, "bk",
@@ -698,11 +685,7 @@ def cosine_neardup_pairs(corpus: DataFrame, threshold: float = 0.95,
     v1 = corpus.select(F.col(id_col).alias("d1"), F.col(vec_col).alias("v1"))
     v2 = corpus.select(F.col(id_col).alias("d2"), F.col(vec_col).alias("v2"))
     withv = cand.join(v1, "d1").join(v2, "d2")
-    if impl == "arrow":
-        score = cosine_arrow()(F.col("v1"), F.col("v2"))
-    else:
-        score = (dot(F.col("v1"), F.col("v2"))
-                 / (l2_norm(F.col("v1")) * l2_norm(F.col("v2"))))
+    score = cosine_arrow()(F.col("v1"), F.col("v2"))
     return (withv.select("d1", "d2", score.cast("double").alias("score"))
             .filter(F.col("score") >= threshold))
 
@@ -750,7 +733,6 @@ def cosine_neardup_pairs_capped(corpus: DataFrame, threshold: float = 0.95,
                                 planes: int = 16, bands: int = 4,
                                 id_col: str = "vec_id",
                                 vec_col: str = "embedding",
-                                impl: str = "arrow",
                                 probe_flips: int = 0) -> DataFrame:
     """cosine_neardup_pairs with the per-doc top-m cap applied — the
     form safe to run over a full 100 TB corpus (output linear in N;
@@ -758,8 +740,7 @@ def cosine_neardup_pairs_capped(corpus: DataFrame, threshold: float = 0.95,
     candidate stage."""
     raw = cosine_neardup_pairs(corpus, threshold=threshold, dim=dim,
                                planes=planes, bands=bands, id_col=id_col,
-                               vec_col=vec_col, impl=impl,
-                               probe_flips=probe_flips)
+                               vec_col=vec_col, probe_flips=probe_flips)
     return neardup_top_m(raw, m=m)
 
 

@@ -106,20 +106,3 @@ def bounded_collect(df, what: str, limit: int = _MAX_DRIVER_ROWS):
             "bounded; use a distributed form (e.g. star-contraction "
             "connected components) instead.")
     return rows
-
-def build_concurrently(builders: list) -> list:
-    """Run independent plan-BUILDERS (zero-arg callables returning a
-    DataFrame) from a driver thread pool and return their results in
-    order — guide §2.6 (overlap independent jobs) applied to the
-    build phase: many plan builders run eager work (localCheckpoint
-    materializations, prefix-sum carry collects, py4j expression
-    construction), and calling them sequentially serializes small jobs
-    the scheduler could overlap. Results are unchanged — each builder
-    produces the same frame it would produce sequentially; only the
-    wall-clock interleaving differs. py4j releases the GIL on every
-    socket round-trip, so construction overlaps too."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=len(builders)) as pool:
-        futures = [pool.submit(b) for b in builders]
-        return [f.result() for f in futures]

@@ -697,47 +697,32 @@ def pipeline_curate_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     dc = F.least(F.floor(T.stopword_ratio(F.col("text"), "en") * 100)
                  .cast("long"), F.lit(10))
 
-    def build_canon():
-        pairs = D.ngram_jaccard_pairs(docs, threshold=0.5)
-        comps = D.connected_components(pairs, docs.select("doc_id"))
-        w = F.size(F.split(F.col("text"), " ")).cast("long")
-        wts = docs.select("doc_id", w.alias("w"))
-        # Per-component argmax as a min_by aggregate, not a rank window
-        # (VERDICT_r9 ask #2): a mega-clique component would otherwise
-        # sort in a single task; min_by combines map-side. The ordering
-        # struct (-w, doc_id) is unique per row, so this equals the
-        # oracle's rn=1.
-        return (comps.join(wts, "doc_id")
-                .groupBy("component")
-                .agg(F.min_by(F.struct(F.col("doc_id"), F.col("w")),
-                              F.struct((-F.col("w")).alias("nw"),
-                                       F.col("doc_id").alias("d")))
-                     .alias("c"))
-                .select(F.col("c.doc_id").alias("doc_id"), "component",
-                        F.col("c.w").alias("w")))
+    pairs = D.ngram_jaccard_pairs(docs, threshold=0.5)
+    comps = D.connected_components(pairs, docs.select("doc_id"))
+    w = F.size(F.split(F.col("text"), " ")).cast("long")
+    wts = docs.select("doc_id", w.alias("w"))
+    # Per-component argmax as a min_by aggregate, not a rank window
+    # (VERDICT_r9 ask #2): a mega-clique component would otherwise
+    # sort in a single task; min_by combines map-side. The ordering
+    # struct (-w, doc_id) is unique per row, so this equals the
+    # oracle's rn=1.
+    canon = (comps.join(wts, "doc_id")
+             .groupBy("component")
+             .agg(F.min_by(F.struct(F.col("doc_id"), F.col("w")),
+                           F.struct((-F.col("w")).alias("nw"),
+                                    F.col("doc_id").alias("d")))
+                  .alias("c"))
+             .select(F.col("c.doc_id").alias("doc_id"), "component",
+                     F.col("c.w").alias("w")))
 
-    def build_gate():
-        cells = (docs.select(q.alias("q"), dc.alias("dc"),
-                             F.when(F.col("lang") == "en", 1).otherwise(0)
-                             .alias("y"))
-                 .groupBy("q", "dc")
-                 .agg(F.count(F.lit(1)).cast("long").alias("n"),
-                      F.sum("y").cast("long").alias("ny"))
-                 .localCheckpoint(eager=True))
-        return cells, logistic_irls_cells(cells, iters=_LOGIT_ITERS)
-
-    # r11 (guide §2.6): the dedup-components branch and the IRLS-gate
-    # branch are independent until `surv`, and BOTH run eager work at
-    # build time (star-contraction rounds; census checkpoint + 4
-    # Newton-step collects) — overlapping the two builds hides the
-    # cheaper one entirely. Plans and rows are unchanged.
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=2) as pool:
-        f_canon = pool.submit(build_canon)
-        f_gate = pool.submit(build_gate)
-        canon = f_canon.result()
-        cells, (b0, b1, b2) = f_gate.result()
+    cells = (docs.select(q.alias("q"), dc.alias("dc"),
+                         F.when(F.col("lang") == "en", 1).otherwise(0)
+                         .alias("y"))
+             .groupBy("q", "dc")
+             .agg(F.count(F.lit(1)).cast("long").alias("n"),
+                  F.sum("y").cast("long").alias("ny"))
+             .localCheckpoint(eager=True))
+    b0, b1, b2 = logistic_irls_cells(cells, iters=_LOGIT_ITERS)
     qd, dcd = F.col("q").cast("double"), F.col("dc").cast("double")
     eta = F.lit(b0) + F.lit(b1) * qd + F.lit(b2) * dcd
     etac = F.greatest(F.least(eta, F.lit(13.0)), F.lit(-13.0))

@@ -447,30 +447,16 @@ def _drift_report_oracle() -> str:
     tags=("dq", "stats", "events", "pipeline"),
 )
 def dq_drift_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from concurrent.futures import ThreadPoolExecutor
-
     from g1_etl_spark.plans.registry import REGISTRY
 
-    # r11 (guide §2.6): the three monitors are independent plans whose
-    # BUILD already runs eager actions (grouped-prefix repartition +
-    # checkpoint + carry collects), so calling them sequentially
-    # serializes ~5 s of small jobs; a driver thread pool overlaps the
-    # builds. Each monitor's plan — and therefore the report's rows —
-    # is unchanged.
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        f_fdr = pool.submit(REGISTRY["stats_fdr_bh"].fn, spark, sf_dir)
-        f_ph = pool.submit(
-            REGISTRY["events_page_hinkley"].fn, spark, sf_dir)
-        f_gt = pool.submit(
-            REGISTRY["events_gtest_halves"].fn, spark, sf_dir)
-        fdr = f_fdr.result().select(
-            "event_type", "ks_d", "p_value", "bh_rank",
-            F.col("rejected").alias("dist_drifted"))
-        ph = f_ph.result().select(
-            "event_type", "max_excursion", "n_alarms", "first_alarm_us")
-        gt = f_gt.result().select(
-            F.col("g_stat").alias("mix_g_stat"),
-            F.col("df").alias("mix_df"))
+    fdr = REGISTRY["stats_fdr_bh"].fn(spark, sf_dir).select(
+        "event_type", "ks_d", "p_value", "bh_rank",
+        F.col("rejected").alias("dist_drifted"))
+    ph = REGISTRY["events_page_hinkley"].fn(spark, sf_dir).select(
+        "event_type", "max_excursion", "n_alarms", "first_alarm_us")
+    gt = REGISTRY["events_gtest_halves"].fn(spark, sf_dir).select(
+        F.col("g_stat").alias("mix_g_stat"),
+        F.col("df").alias("mix_df"))
     return (fdr.join(ph, "event_type")
             .crossJoin(F.broadcast(gt))
             .orderBy("event_type"))

@@ -664,22 +664,15 @@ def orders_rfm_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.datediff(F.col("_ad"), F.col("_last")).cast("long")
                     .alias("recency_days"),
                     "frequency", "_msc"))
-    # r11 (guide §2.6): the three quintile assignments are independent
-    # total-order ranks over BASE columns — chaining them serialized
-    # three range-repartition + checkpoint + offset-collect passes.
-    # Build the three bin frames concurrently (each bins the same
-    # (value, custkey) pairs over the same N, so assignments are
-    # unchanged) and join them back 1:1 on the unique custkey.
-    from g1_etl_spark.plans._util import build_concurrently
-
+    # Each quintile assignment bins the same (value, custkey) pairs over
+    # the same N; the three join back 1:1 on the unique custkey.
     def _bins(col: str, out: str) -> DataFrame:
         return (equidepth_bins(base, col, ["custkey"], 5, out)
                 .select("custkey", out))
 
-    rb, fb, mb = build_concurrently([
-        lambda: _bins("recency_days", "_rb"),
-        lambda: _bins("frequency", "_fb"),
-        lambda: _bins("_msc", "_mb")])
+    rb = _bins("recency_days", "_rb")
+    fb = _bins("frequency", "_fb")
+    mb = _bins("_msc", "_mb")
     b = base.join(rb, "custkey").join(fb, "custkey").join(mb, "custkey")
     r = (F.lit(6) - F.col("_rb")).cast("int")
     f_ = F.col("_fb").cast("int")

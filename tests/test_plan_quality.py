@@ -779,3 +779,32 @@ def test_bucketed_twins_elide_smj_sort(spark):
                 f"{name}: order-key Sort above a non-distinct child — "
                 f"bucket-sorted scan no longer reports its ordering:\n"
                 f"{ln}\n{child}")
+
+
+def test_build_jobs_stay_in_caller_job_group(spark):
+    """A registered fn's eager build work (checkpoints, carry collects)
+    must run on the caller's thread, so every job it starts carries the
+    caller's job group — the label a caller cancels and attributes by.
+    A driver thread pool breaks this: under pinned threads a pool
+    thread does not inherit the caller's local properties."""
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    keys = ("spark.jobGroup.id", "spark.job.description",
+            "spark.job.interruptOnCancel")
+    saved = {k: sc.getLocalProperty(k) for k in keys}
+    counts = {}  # name -> (jobs outside the group, jobs in it)
+    try:
+        for name in ("dq_drift_report", "pipeline_curate_select",
+                     "orders_rfm_scores"):
+            group = f"build-{name}"
+            sc.setJobGroup(group, name)
+            before = set(tracker.getJobIdsForGroup(None))
+            REGISTRY[name].fn(spark, SF_SMOKE)
+            stray = set(tracker.getJobIdsForGroup(None)) - before
+            counts[name] = (len(stray),
+                            len(tracker.getJobIdsForGroup(group)))
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+    assert all(out == 0 and ins > 0 for out, ins in counts.values()), (
+        f"(outside, inside) the caller's job group per build: {counts}")

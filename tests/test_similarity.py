@@ -89,8 +89,9 @@ def test_lsh_signature_deterministic(spark):
 
 
 def test_arrow_signature_matches_hof(spark):
-    """Same planes, same bit rule — the Arrow and HOF signatures agree
-    except at exact dot==0 boundaries (absent in real-valued data)."""
+    """Same planes, same bit rule — the Arrow kernel and its HOF
+    reference agree except at exact dot==0 boundaries (absent in
+    real-valued data)."""
     emb = _emb(spark).limit(200)
     hof = emb.select("vec_id",
                      S.lsh_signature(F.col("embedding"), 64).alias("s"))
