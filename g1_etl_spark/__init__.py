@@ -9,7 +9,7 @@ Layout:
     operators/  — dedup, similarity, text analysis, multimodal plumbing, window helpers
     plans/      — named query registry (queries() + oracle_sql() pairs for the driver)
     entities/   — the six reference entity pipelines as declarative DataFrame transforms
-    streaming/  — Structured Streaming window/watermark builders over the events table
+    streaming/  — one Structured Streaming exemplar per mechanism (windows, joins, sinks, state)
     sources/    — readers and sinks
 """
 

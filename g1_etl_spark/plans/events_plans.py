@@ -1,6 +1,8 @@
-"""Driver-facing event-stream analytics on the events table (batch form;
-the streaming twins live in g1_etl_spark/streaming/windows.py and are
-exercised with memory-sink tests).
+"""Driver-facing event-stream analytics on the events table (batch form).
+g1_etl_spark/streaming/ holds one Structured Streaming exemplar per
+mechanism; the streaming forms of events_tumbling_window,
+events_sessionization, events_range_join and events_pattern_seq are
+among them, checked against batch in tests/test_streaming.py.
 
 Window alignment: Spark's window(ts, w) buckets are epoch-aligned, same
 as DuckDB's time_bucket — starts match exactly. Sums go through the
@@ -99,7 +101,8 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM s GROUP BY user_id, session_id
     """,
     description="batch sessionization: 30-min-gap split via lag+cumsum "
-                "(streaming twin: session_window)",
+                "(streaming form: session_window in "
+                "streaming/windows.session_aggregates)",
     tags=("events", "window"),
 )
 def events_sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -951,10 +954,8 @@ def events_percentile_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     SELECT event_type, user_id, n, rank FROM r WHERE rank <= 16
     """,
     description="exact per-type heavy hitters (top-16 users by event "
-                "count, deterministic tie-break) — the batch twin of "
-                "the streaming Space-Saving sketch "
-                "(streaming/stateful.py:streaming_heavy_hitters); one "
-                "count shuffle + two-stage top-k",
+                "count, deterministic tie-break); one count shuffle + "
+                "two-stage top-k",
     tags=("events", "agg", "topk"),
 )
 def events_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1339,10 +1340,7 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "list_reduce): both engines execute the identical "
                 "IEEE op sequence — one add and one exact "
                 "exponent-shift halving per step — so the result is "
-                "bit-deterministic, and a stateful streaming twin "
-                "carrying just (y, count) reproduces it EXACTLY "
-                "(streaming/stateful.streaming_ewma; the state update "
-                "IS the fold step). Scale shape: one groupBy user, "
+                "bit-deterministic. Scale shape: one groupBy user, "
                 "per-user arrays bounded by per-user event counts",
     tags=("events", "window", "stats"),
 )
@@ -1352,11 +1350,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     # per task is O(max events per user) ≈ 24 B/struct, so ~1 M events
     # for a single pathological key (bot traffic) is ~24 MB in one row:
     # tolerable, verified by tests/test_stats.py::
-    # test_ewma_fold_survives_1m_event_skew_key. Beyond that, run the
-    # streaming twin instead (streaming/stateful.streaming_ewma): it
-    # applies the IDENTICAL per-element update with O(1) carried
-    # (y, count) state — bit-equal output, no array materialization —
-    # at the cost of time-ordered delivery per key. user_id is
+    # test_ewma_fold_survives_1m_event_skew_key. user_id is
     # high-cardinality — the partition key is fine; the bound is about
     # one hot key, not the key count.
     ev = load_table(spark, sf_dir, "events")
@@ -1417,9 +1411,7 @@ def events_ewma_value(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "bucket, whose trailing-1h frames are the only ones "
                 "that can reach back to it, so partition count grows "
                 "with the time span and no task ever owns a full "
-                "type's history. Bit-exact streaming twin: "
-                "streaming/stateful.streaming_zscore_anomaly (same "
-                "scaled-long window sums as O(window) state)",
+                "type's history",
     tags=("events", "window", "stats", "quality"),
 )
 def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1508,11 +1500,7 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "driver-held offsets), then per-type prefixes are "
                 "recovered by subtracting the earlier types' grand "
                 "totals (a broadcast of one row per event type) — no "
-                "per-type single-task ordered window anywhere. The "
-                "O(1)-state streaming twin is streaming/stateful."
-                "streaming_cusum (batch trains the mean, the stream "
-                "monitors |cumulative deviation| + running max, "
-                "bit-equal per sealed event)",
+                "per-type single-task ordered window anywhere",
     tags=("events", "window", "stats", "quality", "streaming"),
 )
 def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1866,10 +1854,7 @@ def events_seasonal_hour(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "IDENTICAL IEEE sequence in both engines, so the result "
                 "is bit-deterministic with no tolerance. Scale shape "
                 "and per-user array bound are exactly "
-                "events_ewma_value's (see its SCALE BOUND note); the "
-                "O(1)-state streaming twin is "
-                "streaming/stateful.streaming_holt, bit-equal by the "
-                "same argument as streaming_ewma",
+                "events_ewma_value's (see its SCALE BOUND note)",
     tags=("events", "window", "stats", "forecast"),
 )
 def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2140,9 +2125,7 @@ def events_gtest_halves(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "level + trend + s[next slot] and the seasonal "
                 "spread. Scale shape: per-user arrays (the "
                 "events_ewma_value SCALE BOUND note applies "
-                "verbatim); the O(m)-state streaming twin is "
-                "streaming/stateful.streaming_holtwinters, "
-                "bit-equal by the same sealed-prefix argument",
+                "verbatim)",
     tags=("events", "window", "stats", "forecast", "timeseries"),
 )
 def events_holtwinters(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2762,11 +2745,7 @@ _SAX_BP_W = 674490    # round(0.6745 * 1e6): N(0,1) quartile breakpoints
                 "scaled-integer constants, so the symbol decision is "
                 "an integer comparison — no boundary ulp exposure. "
                 "Scale shape: the grid is time-span-bounded; the one "
-                "data-sized stage is the hour census. The O(1)-state "
-                "streaming twin is streaming/stateful.streaming_sax "
-                "(trained whole-series moments joined stream-static, "
-                "per-segment count state, watermark-sealed emission) "
-                "— bit-equal on every sealed full segment",
+                "data-sized stage is the hour census",
     tags=("events", "text", "forecast", "streaming"),
 )
 def events_sax_symbols(spark: SparkSession, sf_dir: str) -> DataFrame:

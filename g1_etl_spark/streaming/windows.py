@@ -67,31 +67,6 @@ def session_aggregates(events: DataFrame, gap: str = "30 minutes",
                     "n_events", "session_value"))
 
 
-def session_documents_stream(events: DataFrame, gap: str = "30 minutes",
-                             watermark: str = "2 hours") -> DataFrame:
-    """Streaming twin of operators.temporal.session_documents: native
-    session_window sessions folded into (time, id)-ordered token
-    strings as they CLOSE (append mode — a session's document is
-    immutable once the watermark passes its end, exactly the property
-    a downstream training-data writer wants). State per open session is
-    the buffered (us, id, token) structs — bounded by session length,
-    the same bound as the batch fold."""
-    ordered = F.array_sort(
-        F.collect_list(F.struct(F.unix_micros("ts").alias("us"),
-                                F.col("event_id").alias("_id"),
-                                F.col("event_type").alias("_tok"))))
-    return (events
-            .withWatermark("ts", watermark)
-            .groupBy(F.session_window("ts", gap).alias("w"), "user_id")
-            .agg(F.count(F.lit(1)).alias("n_events"),
-                 (F.max(F.unix_micros("ts"))
-                  - F.min(F.unix_micros("ts"))).alias("duration_us"),
-                 F.array_join(F.transform(ordered, lambda x: x["_tok"]),
-                              " ").alias("doc"))
-            .select("user_id", F.col("w.start").alias("session_start"),
-                    "n_events", "duration_us", "doc"))
-
-
 def dedup_within_watermark(events: DataFrame,
                            watermark: str = "2 hours") -> DataFrame:
     """Exactly-once-per-id within the watermark horizon — bounded-state
@@ -142,8 +117,7 @@ def enrich_stream(events: DataFrame, dim: DataFrame, on: str,
     return events.join(F.broadcast(dim), on, how)
 
 
-def write_foreach_batch(stream_df: DataFrame, path: str,
-                        checkpoint: str, fmt: str = "parquet"):
+def write_foreach_batch(stream_df: DataFrame, path: str, checkpoint: str):
     """foreachBatch sink: each micro-batch lands as
     `{path}/batch_id=N` via the batch writer — the escape hatch for
     sinks without native streaming support (JDBC, Mongo, multi-table
@@ -152,9 +126,8 @@ def write_foreach_batch(stream_df: DataFrame, path: str,
     checkpointed source offsets)."""
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
-        (batch_df.write.mode("overwrite")
-         .format(fmt)
-         .save(f"{path}/batch_id={batch_id}"))
+        batch_df.write.mode("overwrite").parquet(
+            f"{path}/batch_id={batch_id}")
 
     return (stream_df.writeStream
             .foreachBatch(handle)
@@ -173,8 +146,8 @@ def run_to_memory(stream_df: DataFrame, name: str,
     flush can land AFTER processAllAvailable returns. The settle loop
     gives the engine `settles` beats to run those timer-only batches
     and drains after each; without it the tail emission race is
-    timing-dependent (observed: the last user's sealed gap-fill rows
-    present or absent run to run)."""
+    timing-dependent (the last user's sealed rows present or absent
+    run to run)."""
     import time as _time
 
     q = (stream_df.writeStream
@@ -190,9 +163,7 @@ def run_to_memory(stream_df: DataFrame, name: str,
 
 
 def incremental_backfill(spark, src_path: str, dest_path: str,
-                         checkpoint: str,
-                         schema: T.StructType = EVENTS_STREAM_SCHEMA,
-                         transform=None) -> int:
+                         checkpoint: str) -> int:
     """Checkpointed incremental ingest with Trigger.AvailableNow:
     process every file not yet seen by this checkpoint, write append-
     only parquet, then STOP — the batch-shaped front door to Structured
@@ -204,16 +175,9 @@ def incremental_backfill(spark, src_path: str, dest_path: str,
     Unlike Trigger.Once, AvailableNow respects source rate limits
     (maxFilesPerTrigger) by draining in multiple micro-batches, so a
     month-long backfill doesn't become one giant unbounded batch.
-    `transform` (optional) maps the streaming frame before the sink —
-    the same narrow transforms a batch job would apply. Returns the
-    number of micro-batches executed this run.
+    Returns the number of micro-batches executed this run.
     """
-    stream = (spark.readStream.schema(schema)
-              .option("maxFilesPerTrigger", 1)
-              .parquet(src_path))
-    if transform is not None:
-        stream = transform(stream)
-    q = (stream.writeStream
+    q = (read_events_stream(spark, src_path).writeStream
          .format("parquet")
          .option("path", dest_path)
          .option("checkpointLocation", checkpoint)
@@ -223,103 +187,3 @@ def incremental_backfill(spark, src_path: str, dest_path: str,
     q.awaitTermination()
     progress = q.recentProgress
     return len([p for p in progress if p["numInputRows"] > 0])
-
-
-def histogram_drift_stream(events: DataFrame, reference: DataFrame,
-                           lo: float, hi: float, n_bins: int = 8,
-                           value_col: str = "value",
-                           window: str = "1 hour",
-                           watermark: str = "2 hours") -> DataFrame:
-    """Streaming distribution-drift monitor — the sealed-window twin of
-    operators.quality.distribution_drift: per tumbling window, the
-    fixed-range equi-width histogram of `value_col`, joined against a
-    static per-bin `reference` (bin, ref_share), with the symmetric
-    chi-square contribution per (window, bin). A streaming monitor
-    compares to a FIXED reference band — it cannot rescan history for
-    a combined range, which is how production drift monitors work
-    (the reference band comes from the batch audit).
-
-    State discipline: ONE watermarked window aggregate holding n_bins
-    counters per open window (the bins ride as conditional-sum columns,
-    so there is no second stateful operator for the window total); the
-    explode to per-bin rows and the reference join are stateless and
-    run as the window seals. Late data beyond the watermark is dropped,
-    flags are final when they emit.
-    """
-    # a truncated reference band would otherwise silently drop exactly
-    # the drifted bins from the monitor (the join below keys on bin) —
-    # validate coverage of 0..n_bins-1 up front; the reference is
-    # n_bins rows by construction, so this collect is bounded
-    ref_rows = [r["bin"] for r in reference.select("bin").collect()]
-    ref_bins = set(ref_rows)
-    missing = sorted(set(range(n_bins)) - ref_bins)
-    if missing:
-        raise ValueError(
-            f"histogram_drift_stream: reference band is missing bins "
-            f"{missing} — the batch audit must cover 0..{n_bins - 1}")
-    if len(ref_rows) != len(ref_bins):
-        # a duplicated bin row would silently fan out the join below,
-        # double-counting that bin's monitor output — same silent-
-        # corruption class as a missing bin, so fail just as loudly
-        dupes = sorted(b for b in ref_bins if ref_rows.count(b) > 1)
-        raise ValueError(
-            f"histogram_drift_stream: reference band has duplicate "
-            f"rows for bins {dupes}")
-    width = (hi - lo) / n_bins
-    bin_col = F.least(F.lit(n_bins - 1),
-                      F.greatest(F.lit(0), F.floor(
-                          (F.col(value_col) - lo) / width))).cast("int")
-    counters = [F.sum(F.when(bin_col == i, 1).otherwise(0)).alias(f"b{i}")
-                for i in range(n_bins)]
-    agg = (events.withWatermark("ts", watermark)
-           .groupBy(F.window("ts", window).alias("w"))
-           .agg(F.count(F.lit(1)).alias("n_total"), *counters))
-    per_bin = agg.select(
-        F.col("w.start").alias("window_start"), "n_total",
-        F.posexplode(F.array(*[F.col(f"b{i}") for i in range(n_bins)]))
-        .alias("bin", "n"))
-    share = F.col("n").cast("double") / F.col("n_total")
-    contrib = ((share - F.col("ref_share"))
-               * (share - F.col("ref_share"))
-               / (share + F.col("ref_share")))
-    return (per_bin.join(F.broadcast(reference), "bin")
-            .select("window_start", "bin", "n", share.alias("share"),
-                    "ref_share",
-                    F.when(share + F.col("ref_share") > 0, contrib)
-                    .otherwise(F.lit(0.0)).alias("contrib")))
-
-
-def cms_sketch_stream(events: DataFrame, window: str = "1 hour",
-                      watermark: str = "2 hours",
-                      width: int = 256) -> DataFrame:
-    """Streaming Count-Min sketch: per tumbling window, the (j, bucket)
-    cell counts of user_id frequencies — the same mergeable structure
-    as operators/sketches.cms_build, maintained incrementally.
-
-    This is the CMS's whole point in a streaming engine: cell updates
-    are SUMs, so the stateful aggregate is an ordinary watermarked
-    groupBy whose state is bounded at depth*width rows PER WINDOW no
-    matter how many distinct users flow through; sketches for closed
-    windows are final and merge across windows (or across streams) by
-    cell-wise addition. The batch twin — cms_build over the same rows —
-    must produce identical cells (equivalence-tested), which also
-    certifies the arithmetic LCG bucketing is deterministic under
-    streaming's incremental accumulation order.
-    """
-    from g1_etl_spark.operators.sketches import CMS_HASHES, CMS_P
-
-    fan = F.explode(F.array(*[
-        F.struct(
-            F.lit(j).alias("j"),
-            (((F.lit(a) * F.col("user_id").cast("long") + F.lit(b))
-              % CMS_P) % width).alias("bucket"))
-        for j, (a, b) in enumerate(CMS_HASHES)])).alias("cell")
-    return (events
-            .withWatermark("ts", watermark)
-            .select("ts", fan)
-            .groupBy(F.window("ts", window).alias("w"),
-                     F.col("cell.j").alias("j"),
-                     F.col("cell.bucket").alias("bucket"))
-            .agg(F.count(F.lit(1)).alias("c"))
-            .select(F.col("w.start").alias("window_start"),
-                    "j", "bucket", "c"))

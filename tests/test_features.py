@@ -8,7 +8,7 @@ import math
 from pyspark.sql import functions as F
 
 from g1_etl_spark.operators import features as FE
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 def test_zscore_group_stats(spark):
@@ -205,3 +205,23 @@ def test_woe_iv_signs_track_bad_rate(spark):
         if abs(rate - overall) > 0.01:
             assert (r.woe_e6 > 0) == (rate < overall), r
         assert r.iv_term >= -1e-9  # IV contributions are non-negative
+
+
+def test_logistic_irls_coefficients_golden(spark):
+    """feat_logistic_irls computes exp() on the driver with the host
+    libm, so its pinned IRLS iterates depend on that libm. Pin the
+    coefficient vector exactly (repr floats, no tolerance) so a libm
+    drift fails here by name, not only through the downstream parity
+    hash."""
+    from g1_etl_spark.plans import REGISTRY
+
+    want = {
+        SF_SMOKE: (-0.6916095318067965, -0.0006926262528226312,
+                   -0.16012799439006278),
+        SF_ORACLE: (-0.6954778325939334, -0.00024066392181245233,
+                    0.238031438256785),
+    }
+    for sf, coefs in want.items():
+        (r,) = REGISTRY["feat_logistic_irls"].fn(spark, sf).collect()
+        got = (r.coef_intercept, r.coef_quantity, r.coef_discount)
+        assert got == coefs, (sf, got)

@@ -427,8 +427,7 @@ def test_ewma_fold_matches_recursion_bitwise(spark):
     """events_ewma_value is the literal recursion y_n = (x_n +
     y_{n-1}) / 2 as an ordered fold — the driver-side Python recursion
     executes the identical IEEE op sequence, so equality is EXACT, not
-    within tolerance (this is the property that lets the streaming
-    twin's (y, count) state reproduce the batch result bit-for-bit)."""
+    within tolerance."""
     from g1_etl_spark.plans import REGISTRY
 
     got = {r.user_id: r for r in REGISTRY["events_ewma_value"].fn(
@@ -454,8 +453,7 @@ def test_ewma_fold_survives_1m_event_skew_key(spark):
     its whole history as ONE array row before the fold — ~24 MB, which
     must complete AND still be the bit-exact recursion. Pins the bound
     at probe scale so 'fine for high-cardinality keys' stays an
-    evidenced claim, not a hope; beyond this, the streaming twin's
-    O(1) (y, count) state is the documented escape hatch."""
+    evidenced claim, not a hope."""
     import os
     import shutil
     import tempfile
