@@ -1,10 +1,20 @@
-"""Pareto/skyline analytics as distributed prefix aggregation.
+"""Distributed prefix aggregation: the prefix-sum scan, Pareto/ABC
+classes and the 2-D skyline.
 
-No reference analog (superset scope). The classic 2-D skyline
-("minimize x, maximize y": keep every row no other row beats on both
-axes) is usually written as the quadratic NOT EXISTS self-join — which
-is exactly what the DuckDB oracle runs. The Spark form here is EXACT
-but linear: dominance in 2-D reduces to two aggregates,
+No reference analog (superset scope; the reference folds running state
+row by row in one iterator). :func:`grouped_prefix_aggs` is the repo's
+ONE prefix scan — every running sum, running count and total-order rank
+(retrieval.global_rank, curation.budget_fill, pareto_abc, the survival/
+rank statistics, the per-type CUSUM family) calls it: range-repartition
+on (group, order), per-partition local running sums, and a driver fold
+of carries bounded at partitions x groups, broadcast back. No
+single-partition window anywhere.
+
+The classic 2-D skyline ("minimize x, maximize y": keep every row no
+other row beats on both axes) is usually written as the quadratic NOT
+EXISTS self-join — which is exactly what the DuckDB oracle runs. The
+Spark form here is EXACT but linear: dominance in 2-D reduces to two
+aggregates,
 
     dominated(r)  <=>  max(y | x <  r.x) >= r.y     (strictly-cheaper)
                     OR max(y | x == r.x) >  r.y     (same-x, bigger-y)
@@ -13,13 +23,13 @@ so the whole skyline is (1) a per-x group max, (2) a STRICT prefix max
 over the x-ordered group table, (3) one equi-join back on x. No
 pairwise comparisons anywhere, no prune-then-verify residue.
 
-The strict prefix max follows the repo's distributed total-order shape
-(retrieval.global_rank / curation.budget_fill): range-repartition the
-group table on x, take each partition's local strictly-preceding
-running max with a per-partition window, and fold in the (partition-
-count-sized, driver-held) max of all earlier partitions. Exact
-duplicates — two rows with identical (x, y) — dominate neither and are
-both kept, matching the strict-in-one NOT EXISTS semantics.
+The strict prefix max has the prefix scan's shape but its own carry (a
+strictly-preceding MAX is neither a sum nor a min-of-sum):
+range-repartition the group table on x, take each partition's local
+strictly-preceding running max with a per-partition window, and fold in
+the (partition-count-sized, driver-held) max of all earlier partitions.
+Exact duplicates — two rows with identical (x, y) — dominate neither
+and are both kept, matching the strict-in-one NOT EXISTS semantics.
 """
 
 from __future__ import annotations
@@ -49,7 +59,7 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str,
         offsets.append((pid, best))
         best = pmax[pid] if best is None else max(best, pmax[pid])
     # explicit schema: offsets may be empty / all-NULL (first partition
-    # has no predecessor) — same idiom as retrieval.global_rank
+    # has no predecessor) — same idiom as grouped_prefix_aggs
     field = df.schema[max_col].dataType.simpleString()
     off_df = spark.createDataFrame(offsets, f"_pid INT, _off {field}")
     lw = (W.partitionBy("_pid").orderBy("_p")
@@ -66,72 +76,6 @@ def skyline_2d(df: DataFrame, min_col: str, max_col: str,
     return joined.filter(~dominated).select(*df.columns)
 
 
-def global_prefix_sums_with_totals(
-        df: DataFrame, order_cols: list, sums: dict[str, str],
-        partitions: int | None = None) -> tuple[DataFrame, list[int]]:
-    """Inclusive running SUMs of one or more integer columns over a
-    TOTAL order — the distributed prefix-sum shape shared by
-    pareto_abc, curation.budget_fill, stats_auc_purchase and
-    events_cusum_drift, factored out: ONE range-repartition on the
-    sort key, per-partition local running sums, driver-held offsets
-    (one row per PARTITION, bounded and tiny — Python-bigint exact).
-    No single-partition window anywhere. `sums` maps out_col ->
-    value_col; every value column rides the same repartition/window
-    pass. `order_cols` must be a total order (caller tie-breaks);
-    exclusive form = out_col - value_col at the call site.
-
-    Returns (frame, grand_totals) where grand_totals[i] is the exact
-    Python-int sum of the i-th value column — free here (the offsets
-    pass already folds every partition total), and callers like
-    pareto_abc need it for driver-side thresholds."""
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    parts = (df.repartitionByRange(n, *order_cols)
-             .withColumn("_pid", F.spark_partition_id())
-             .localCheckpoint())  # freeze pid assignment
-    items = list(sums.items())
-    totals = {r["_pid"]: [r[f"_t{i}"] for i in range(len(items))]
-              for r in parts.groupBy("_pid").agg(
-                  *(F.sum(v).alias(f"_t{i}")
-                    for i, (_, v) in enumerate(items))).collect()}
-    running = [0] * len(items)
-    offsets = []
-    for pid in sorted(totals):
-        offsets.append((pid, *running))
-        running = [r + int(t or 0) for r, t in zip(running, totals[pid])]
-    off_schema = "_pid INT, " + ", ".join(
-        f"_off{i} BIGINT" for i in range(len(items)))
-    off_df = spark.createDataFrame(offsets, off_schema)
-    w = (W.partitionBy("_pid").orderBy(*order_cols)
-         .rowsBetween(W.unboundedPreceding, W.currentRow))
-    out = parts
-    for i, (_, v) in enumerate(items):
-        out = out.withColumn(f"_cl{i}", F.sum(v).over(w))
-    out = out.join(F.broadcast(off_df), "_pid")
-    for i, (o, _) in enumerate(items):
-        out = out.withColumn(
-            o, (F.col(f"_cl{i}") + F.col(f"_off{i}")).cast("long"))
-    drop = ["_pid"] + [c for i in range(len(items))
-                       for c in (f"_cl{i}", f"_off{i}")]
-    return out.drop(*drop), running
-
-
-def global_prefix_sums(df: DataFrame, order_cols: list,
-                       sums: dict[str, str],
-                       partitions: int | None = None) -> DataFrame:
-    """:func:`global_prefix_sums_with_totals` without the totals."""
-    return global_prefix_sums_with_totals(df, order_cols, sums,
-                                          partitions=partitions)[0]
-
-
-def global_prefix_sum(df: DataFrame, order_cols: list, value_col: str,
-                      out_col: str = "cum",
-                      partitions: int | None = None) -> DataFrame:
-    """Single-column form of :func:`global_prefix_sums`."""
-    return global_prefix_sums(df, order_cols, {out_col: value_col},
-                              partitions=partitions)
-
-
 def pareto_abc(df: DataFrame, key_col: str, value_col,
                a_pct: int = 70, b_pct: int = 90,
                partitions: int | None = None) -> DataFrame:
@@ -141,10 +85,11 @@ def pareto_abc(df: DataFrame, key_col: str, value_col,
     assortment staple ("which 20% of parts carry 80% of revenue").
 
     `value_col` must be an exact LONG (pre-scaled money; see
-    plans/_util). The running total is
-    :func:`global_prefix_sums_with_totals` on (-value, key) order (one
-    range-repartition, local running sum, driver-held per-partition
-    offsets), and the class thresholds compare pure integers, so
+    plans/_util). The running total is :func:`grouped_prefix_aggs`
+    with no group on (-value, key) order (one range-repartition, local
+    running sum, driver-held per-partition offsets; the grand total
+    comes back with it), and the class thresholds compare pure
+    integers, so
     there is no float anywhere and any engine agrees bit-for-bit. The
     thresholds are precomputed on the driver with Python bigints
     (thr = total * pct // 100 — exactly equivalent to the oracle's
@@ -159,8 +104,9 @@ def pareto_abc(df: DataFrame, key_col: str, value_col,
     base = df.select(F.col(key_col).alias("k"),
                      F.col(value_col).cast("long").alias("v"),
                      (-F.col(value_col).cast("long")).alias("_negv"))
-    cum, (total,) = global_prefix_sums_with_totals(
-        base, ["_negv", "k"], {"cum_value": "v"}, partitions=partitions)
+    cum, totals = grouped_prefix_aggs(
+        base, [], ["_negv", "k"], {"cum_value": "v"}, partitions=partitions)
+    (total,) = totals[()]
     # Python-bigint thresholds; cum <= total*pct//100  ⟺  cum*100 <=
     # total*pct for integer cum, without the int64 overflow at cum*100.
     thr_a = total * a_pct // 100
@@ -177,34 +123,37 @@ def pareto_abc(df: DataFrame, key_col: str, value_col,
 
 
 def grouped_prefix_aggs(df: DataFrame, group_cols: list,
-                        order_cols: list,
-                        sums: dict[str, str] | None = None,
-                        mins: dict[str, str] | None = None,
+                        order_cols: list, sums: dict[str, str],
                         min_of_sums: dict[str, str] | None = None,
-                        partitions: int | None = None) -> DataFrame:
-    """Per-GROUP inclusive running SUMs/MINs over a total order within
-    each group — :func:`global_prefix_sums_with_totals` generalized to
-    a bounded group key (event_type-class cardinality): ONE
+                        partitions: int | None = None,
+                        ) -> tuple[DataFrame, dict[tuple, tuple]]:
+    """Per-GROUP inclusive running SUMs over a total order within each
+    group — the repo's one distributed prefix scan. ONE
     range-repartition on (group, order) keeps each group's rows
     contiguous across the partition range, per-(partition, group)
-    local running aggregates, and driver-held carries — bounded at
+    local running sums, and driver-held carries — bounded at
     partitions x |groups| rows, so the driver state stays tiny. No
-    per-group ordered window over raw rows anywhere; the only windows
-    are per-(partition, group), which AQE-sized partitions keep
-    memory-bounded.
+    ordered window over raw rows anywhere; the only windows are
+    per-(partition, group), which AQE-sized partitions keep
+    memory-bounded. ``group_cols=[]`` is the global prefix sum over
+    one total order (retrieval.global_rank sums a constant 1).
 
-    `sums` / `mins` map out_col -> value_col. The min carry is None
-    until the group has rows in an earlier partition (coalesced away
-    at combine time). `order_cols` must tie-break to a total order
-    within each group.
+    `sums` maps out_col -> value_col; every value column rides the
+    same pass. `order_cols` must tie-break to a total order within
+    each group. NULL group keys form their own group (SQL
+    ``PARTITION BY`` semantics): the carries join null-safely.
 
     `min_of_sums` maps out_col -> an out_col of `sums`, emitting the
-    running MIN of that running sum IN THE SAME PASS (r11): the local
+    running MIN of that running sum IN THE SAME PASS: the local
     window tracks min-over-local-prefix and the driver carry composes
     it with the sum carry (min(M_prev, S_prev + local_min)) — exact
-    integers, identical to feeding the sum output through a second
-    grouped_prefix_aggs call, for one repartition + one ordered pass
-    instead of two (the Page-Hinkley excursion shape).
+    integers (the Page-Hinkley excursion shape).
+
+    Returns ``(frame, totals)``: the input columns plus the out_cols,
+    and ``totals[group_key_tuple]`` = the exact Python-int final sums
+    of that group, in `sums` order — free here, since the driver fold
+    already holds them. With ``group_cols=[]`` the one key ``()`` is
+    always present (all zeros on empty input).
 
     INTEGER-ONLY CONTRACT (ADVICE r10 #4): every value column must be
     an integral type — the driver carries pass through ``int(t)`` and
@@ -214,36 +163,29 @@ def grouped_prefix_aggs(df: DataFrame, group_cols: list,
     """
     spark = df.sparkSession
     n = partitions or spark.sparkContext.defaultParallelism
-    sums = sums or {}
-    mins = mins or {}
-    min_of_sums = min_of_sums or {}
-    items = ([(o, v, "sum") for o, v in sums.items()]
-             + [(o, v, "min") for o, v in mins.items()])
+    items = list(sums.items())
+    mos = list((min_of_sums or {}).items())  # (out_col, sum_out_col)
     _integral = {"tinyint", "smallint", "int", "bigint"}
     vtypes = {f.name: f.dataType.simpleString() for f in df.schema}
-    bad = [(v, vtypes[v]) for (_, v, _) in items
-           if vtypes[v] not in _integral]
+    bad = [(v, vtypes[v]) for (_, v) in items if vtypes[v] not in _integral]
     if bad:
         raise TypeError(
             "grouped_prefix_aggs carries exact integer state; "
             f"non-integral value columns would be truncated: {bad}. "
             "Scale to a long (e.g. round(x * 1e6).cast('long')) first.")
-    sum_idx = {o: i for i, (o, _, k) in enumerate(items) if k == "sum"}
-    mos = list(min_of_sums.items())  # (out_col, sum_out_col)
+    sum_idx = {o: i for i, (o, _) in enumerate(items)}
     for o, so in mos:
         if so not in sum_idx:
             raise ValueError(f"min_of_sums target {so!r} is not a "
                              f"sums output column ({sorted(sum_idx)})")
-    keys = [*group_cols, *order_cols]
-    parts = (df.repartitionByRange(n, *keys)
+    parts = (df.repartitionByRange(n, *group_cols, *order_cols)
              .withColumn("_pid", F.spark_partition_id())
              .localCheckpoint())  # freeze pid assignment
     w = (W.partitionBy("_pid", *group_cols).orderBy(*order_cols)
          .rowsBetween(W.unboundedPreceding, W.currentRow))
     out = parts
-    for i, (_, v, k) in enumerate(items):
-        out = out.withColumn(
-            f"_cl{i}", (F.sum(v) if k == "sum" else F.min(v)).over(w))
+    for i, (_, v) in enumerate(items):
+        out = out.withColumn(f"_cl{i}", F.sum(v).over(w))
     for j, (_, so) in enumerate(mos):
         # running min over the LOCAL running sum (same sort order, so
         # no extra exchange); must be a separate projection step
@@ -253,27 +195,18 @@ def grouped_prefix_aggs(df: DataFrame, group_cols: list,
         # the carry collect below and the final join would otherwise
         # each evaluate the ordered window pass
         out = out.localCheckpoint()
-    agg_src = out if mos else parts
-    agg_rows = agg_src.groupBy("_pid", *group_cols).agg(
-        *((F.sum(v) if k == "sum" else F.min(v)).alias(f"_t{i}")
-          for i, (_, v, k) in enumerate(items)),
+    agg_rows = (out if mos else parts).groupBy("_pid", *group_cols).agg(
+        *(F.sum(v).alias(f"_t{i}") for i, (_, v) in enumerate(items)),
         *(F.min(F.col(f"_cl{sum_idx[so]}")).alias(f"_tm{j}")
           for j, (_, so) in enumerate(mos))).collect()
-    run: dict = {}
+    zero = [0] * len(items) + [None] * len(mos)
+    run: dict = {} if group_cols else {(): zero}
     offsets = []
     for r in sorted(agg_rows, key=lambda r: r["_pid"]):
         g = tuple(r[c] for c in group_cols)
-        st = run.get(g, [0 if k == "sum" else None
-                         for (_, _, k) in items] + [None] * len(mos))
+        st = run.get(g, zero)
         offsets.append((r["_pid"], *g, *st))
-        new = []
-        for i, (_, _, k) in enumerate(items):
-            t = r[f"_t{i}"]
-            if k == "sum":
-                new.append(st[i] + int(t if t is not None else 0))
-            else:
-                cands = [x for x in (st[i], t) if x is not None]
-                new.append(min(cands) if cands else None)
+        new = [st[i] + int(r[f"_t{i}"] or 0) for i in range(len(items))]
         for j, (_, so) in enumerate(mos):
             # min-of-global-prefix so far: compose the pre-partition
             # sum carry with this partition's local min-of-prefix
@@ -285,32 +218,29 @@ def grouped_prefix_aggs(df: DataFrame, group_cols: list,
                 cand = st[sum_idx[so]] + int(lm)
                 new.append(cand if prev is None else min(prev, cand))
         run[g] = new
-    gtypes = dict(zip(df.schema.names,
-                      (f.dataType.simpleString() for f in df.schema)))
-    off_schema = ("_pid INT, "
-                  + ", ".join(f"{c} {gtypes[c]}" for c in group_cols)
-                  + ", "
-                  + ", ".join(f"_off{i} BIGINT"
-                              for i in range(len(items) + len(mos))))
+    # explicit schema: offsets may be empty (empty input frame), and
+    # inference would also widen _pid (int from spark_partition_id)
+    off_schema = ", ".join(
+        ["_opid INT"]
+        + [f"_g{k} {vtypes[c]}" for k, c in enumerate(group_cols)]
+        + [f"_off{i} BIGINT" for i in range(len(items) + len(mos))])
     off_df = spark.createDataFrame(offsets, off_schema)
-    out = out.join(F.broadcast(off_df), ["_pid", *group_cols])
-    for i, (o, _, k) in enumerate(items):
-        if k == "sum":
-            out = out.withColumn(
-                o, (F.col(f"_cl{i}") + F.col(f"_off{i}")).cast("long"))
-        else:
-            out = out.withColumn(
-                o, F.least(F.col(f"_cl{i}"),
-                           F.coalesce(F.col(f"_off{i}"),
-                                      F.col(f"_cl{i}"))).cast("long"))
-    for j, (o, so) in enumerate(mos):
-        local = F.col(f"_cm{j}") + F.col(f"_off{sum_idx[so]}")
+    on = [F.col("_pid") == F.col("_opid")] + [
+        F.col(c).eqNullSafe(F.col(f"_g{k}"))
+        for k, c in enumerate(group_cols)]
+    out = out.join(F.broadcast(off_df), on)
+    for i, (o, _) in enumerate(items):
         out = out.withColumn(
-            o, F.least(local,
-                       F.coalesce(F.col(f"_off{len(items) + j}"),
-                                  local)).cast("long"))
-    drop = (["_pid"]
+            o, (F.col(f"_cl{i}") + F.col(f"_off{i}")).cast("long"))
+    for j, (o, so) in enumerate(mos):
+        # least() skips the NULL carry of a group's first partition
+        out = out.withColumn(
+            o, F.least(F.col(f"_cm{j}") + F.col(f"_off{sum_idx[so]}"),
+                       F.col(f"_off{len(items) + j}")).cast("long"))
+    drop = (["_pid", "_opid"]
+            + [f"_g{k}" for k in range(len(group_cols))]
             + [f"_cl{i}" for i in range(len(items))]
             + [f"_off{i}" for i in range(len(items) + len(mos))]
             + [f"_cm{j}" for j in range(len(mos))])
-    return out.drop(*drop)
+    totals = {g: tuple(st[:len(items)]) for g, st in run.items()}
+    return out.drop(*drop), totals

@@ -249,25 +249,26 @@ def budget_fill(docs: DataFrame, order_cols: list, tokens_col: Column,
 
     The running total is a GLOBAL prefix sum, but a bare
     ``SUM() OVER (ORDER BY ...)`` collapses to one task at scale, so
-    this rides analytics.global_prefix_sum (range-repartition on the
-    sort key, local running sum per partition, then add the
-    partition-count-sized, driver-held prefix of earlier partitions'
-    token totals).
+    this rides analytics.grouped_prefix_aggs with no group
+    (range-repartition on the sort key, local running sum per
+    partition, then add the partition-count-sized, driver-held prefix
+    of earlier partitions' token totals).
 
     Returns doc rows (id ordering columns + keep_cols) with `tokens`
     and `cum_tokens`; filter semantics: a doc is kept iff its own
     cumulative total <= budget (greedy prefix, no partial docs).
     """
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
     # NULL token counts become 0 explicitly: the window SUM would skip
     # them (silently inheriting the previous cumulative total and
     # passing the budget gate for free)
     base = docs.select(*order_cols, *keep_cols,
                        F.coalesce(tokens_col.cast("long"), F.lit(0))
                        .alias("tokens"))
-    return (global_prefix_sum(base, order_cols, "tokens",
-                              out_col="cum_tokens", partitions=partitions)
-            .filter(F.col("cum_tokens") <= budget))
+    cum, _ = grouped_prefix_aggs(base, [], order_cols,
+                                 {"cum_tokens": "tokens"},
+                                 partitions=partitions)
+    return cum.filter(F.col("cum_tokens") <= budget)
 
 
 def source_overlap(docs: DataFrame, text_col: str = "text",

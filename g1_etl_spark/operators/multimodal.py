@@ -452,14 +452,6 @@ def audio_features(samples: np.ndarray, rate: int,
     return np.concatenate([head, hist / max(hist.sum(), 1.0)])
 
 
-def fake_decode_meta(content: bytes) -> dict:
-    """Deterministic decode stand-in: derives 'dimensions' from content
-    length (a real decoder returns the same dict shape)."""
-    n = len(content)
-    return {"width": int(n % 640) + 1, "height": int(n % 480) + 1,
-            "n_bytes": n}
-
-
 def byte_histogram(content: bytes, dim: int = FEATURE_DIM) -> np.ndarray:
     """L1-normalized histogram of byte values in `dim` buckets — a real,
     deterministic feature vector computable without codecs."""
@@ -601,10 +593,6 @@ def resize_media(media: DataFrame, width: int, height: int) -> DataFrame:
     return media.mapInPandas(
         op, schema="media_id long, kind string, content binary, "
                    "width int, height int, resized boolean")
-
-
-# round-1 name; the plumbing is no longer a stub for PPM/BMP content
-resize_stub = resize_media
 
 
 def _dct_matrix(n: int = 32) -> np.ndarray:

@@ -9,11 +9,12 @@ Scale design (100 TB north star):
     shuffle to |distinct (doc,term)|.
   - The vocabulary id assignment is a GLOBAL rank. A naive
     ``row_number() OVER (ORDER BY ...)`` collapses to a single task at
-    scale, so `global_rank` does the classic distributed total-order:
-    range-repartition on the sort key, per-partition local row_number,
-    then add per-partition offsets (a partition-count-sized driver list,
-    broadcast back). Same technique Spark itself uses for sort + zip
-    of indices.
+    scale, so `global_rank` is a running count through the one
+    distributed prefix scan (operators/analytics.grouped_prefix_aggs):
+    range-repartition on the sort key, per-partition local running
+    sums, then add per-partition offsets (a partition-count-sized
+    driver list, broadcast back). Same technique Spark itself uses for
+    sort + zip of indices.
   - BM25 scoring joins postings to a BROADCAST query-term list, so the
     corpus is scanned once and never shuffled by query; the only wide
     ops are the TF/DF aggregates and the skew-free two-stage top-k
@@ -37,6 +38,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 from g1_etl_spark.operators.similarity import _two_stage_topk
 
 _SCALE = 1_000_000
@@ -63,38 +65,17 @@ def doc_terms(df: DataFrame, text_col: str = "text",
 def global_rank(df: DataFrame, order_cols: list[Column],
                 rank_col: str = "rank", partitions: int | None = None,
                 ) -> DataFrame:
-    """Total-order 1-based rank without a single-partition window.
-
-    Range-repartition on the sort key (Spark samples split points), local
-    row_number per partition, then shift each partition by the cumulative
-    size of the partitions before it. The per-partition size list is
-    driver-side but has one entry PER PARTITION, not per row — bounded
-    and tiny. Output ranks are identical to a global
+    """Total-order 1-based rank without a single-partition window: the
+    running sum of a constant 1 over `order_cols`, through the one
+    distributed prefix scan (analytics.grouped_prefix_aggs with no
+    group). Output ranks are identical to a global
     ``row_number() OVER (ORDER BY ...)`` provided `order_cols` is a
     total order (caller must tie-break).
     """
-    spark = df.sparkSession
-    n = partitions or spark.sparkContext.defaultParallelism
-    parts = (df.repartitionByRange(n, *order_cols)
-             .withColumn("_pid", F.spark_partition_id())
-             .localCheckpoint())  # freeze pid assignment
-    sizes = {r["_pid"]: r["cnt"] for r in
-             parts.groupBy("_pid").agg(F.count(F.lit(1)).alias("cnt"))
-             .collect()}
-    offset = 0
-    offsets = []
-    for pid in sorted(sizes):
-        offsets.append((pid, offset))
-        offset += sizes[pid]
-    # explicit schema: offsets may be empty (empty input frame), and
-    # inference would also widen _pid (int from spark_partition_id)
-    off_df = spark.createDataFrame(offsets, "_pid INT, _off BIGINT")
-    lw = W.partitionBy("_pid").orderBy(*order_cols)
-    return (parts.withColumn("_rn", F.row_number().over(lw))
-            .join(F.broadcast(off_df), "_pid")
-            .withColumn(rank_col, (F.col("_rn") + F.col("_off"))
-                        .cast("long"))
-            .drop("_pid", "_rn", "_off"))
+    ranked, _ = grouped_prefix_aggs(
+        df.withColumn("_one", F.lit(1).cast("long")), [], order_cols,
+        {rank_col: "_one"}, partitions=partitions)
+    return ranked.drop("_one")
 
 
 def build_vocab(df: DataFrame, text_col: str = "text",

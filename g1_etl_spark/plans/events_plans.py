@@ -1460,6 +1460,28 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                     n.cast("long").alias("n_window"), "zscore"))
 
 
+def _type_prefixes(ev: DataFrame) -> DataFrame:
+    """Per event: its type's inclusive running sum `prefix` of the
+    scaled value `xs` and 1-based index `i` over (us, event_id), plus
+    the type's count `n` and scaled sum `total` — the CUSUM family's
+    exact-integer inputs (the oracles' ``run``/``tot`` CTEs).
+    """
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
+
+    s = ev.select("event_type", "event_id",
+                  F.unix_micros("ts").alias("us"),
+                  F.round(F.col("value") * 1000000).cast("long")
+                  .alias("xs"),
+                  F.lit(1).cast("long").alias("one"))
+    run, _ = grouped_prefix_aggs(s, ["event_type"], ["us", "event_id"],
+                                 {"prefix": "xs", "i": "one"})
+    # bounded: one row per event type; the inner join drops a NULL
+    # type, as the oracles' JOIN tot USING (event_type) does
+    tot = (s.groupBy("event_type")
+           .agg(F.count(F.lit(1)).alias("n"), F.sum("xs").alias("total")))
+    return run.join(F.broadcast(tot), "event_type")
+
+
 @register(
     "events_cusum_drift",
     oracle="""
@@ -1494,54 +1516,17 @@ def events_anomaly_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "n*prefix_i - i*total (128-bit products), so no float "
                 "accumulates across rows; the single division by "
                 "n*scale happens once per type. Scale shape: the "
-                "running sums ride analytics.global_prefix_sums over "
-                "the TOTAL (event_type, us, event_id) order (one "
-                "range-repartition + per-partition local sums + "
-                "driver-held offsets), then per-type prefixes are "
-                "recovered by subtracting the earlier types' grand "
-                "totals (a broadcast of one row per event type) — no "
-                "per-type single-task ordered window anywhere",
+                "per-type running sum and index ride "
+                "analytics.grouped_prefix_aggs over (event_type, us, "
+                "event_id) (one range-repartition + per-(partition, "
+                "type) local sums + driver carries bounded at "
+                "partitions x types); n and total join back as a "
+                "one-row-per-type broadcast — no per-type single-task "
+                "ordered window anywhere",
     tags=("events", "window", "stats", "quality", "streaming"),
 )
 def events_cusum_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sums
-
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.select("event_type", "event_id",
-                  F.unix_micros("ts").alias("us"),
-                  F.round(F.col("value") * 1000000).cast("long")
-                  .alias("xs"),
-                  F.lit(1).cast("long").alias("one"))
-    # GLOBAL inclusive prefixes over (event_type, us, event_id): gx =
-    # running sum of xs, gi = running row count. Within one type that
-    # order is exactly (us, event_id), so the per-type prefix/index are
-    #   prefix_i = gx - (sum of earlier types' totals)
-    #   i        = gi - (count of earlier types' rows)
-    # and both corrections come from ONE bounded aggregate (one row per
-    # event type — constant cardinality) folded on the driver with
-    # Python bigints and broadcast back.
-    g = global_prefix_sums(s, ["event_type", "us", "event_id"],
-                           {"gx": "xs", "gi": "one"})
-    tot_rows = (s.groupBy("event_type")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum("xs").alias("total"))
-                .collect())  # bounded: one row per event type
-    # sort by UTF-8 bytes — Spark's UTF8String comparator — so the
-    # running bases follow the same type order as the range partitioner
-    tot_rows.sort(key=lambda r: r["event_type"].encode("utf-8"))
-    base_x = base_i = 0
-    rows = []
-    for r in tot_rows:
-        rows.append((r["event_type"], int(r["n"]), int(r["total"]),
-                     base_x, base_i))
-        base_x += int(r["total"] or 0)
-        base_i += int(r["n"])
-    base = spark.createDataFrame(
-        rows, "event_type STRING, n BIGINT, total BIGINT, "
-              "bx BIGINT, bi BIGINT")
-    run = (g.join(F.broadcast(base), "event_type")
-           .withColumn("i", F.col("gi") - F.col("bi"))
-           .withColumn("prefix", F.col("gx") - F.col("bx")))
+    run = _type_prefixes(load_table(spark, sf_dir, "events"))
     d38 = "decimal(38,0)"
     d = F.abs(F.col("n").cast(d38) * F.col("prefix")
               - F.col("i").cast(d38) * F.col("total"))
@@ -1927,8 +1912,8 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "argmax and its (d DESC, i ASC) tie-break are exact; "
                 "the three output means are fixed one-division double "
                 "trees. Scale shape: the per-type prefixes ride the "
-                "same distributed prefix-sum + one-row-per-type "
-                "broadcast bases as the CUSUM rewrite (no per-type "
+                "same grouped_prefix_aggs pass + one-row-per-type "
+                "(n, total) broadcast as events_cusum_drift (no per-type "
                 "ordered window over raw rows — the oracle's windowed "
                 "form is the same integers), and the argmax is a "
                 "partial+final MAX over a lexicographic struct, not a "
@@ -1936,35 +1921,8 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("events", "window", "stats", "quality"),
 )
 def events_changepoint_split(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sums
-
-    ev = load_table(spark, sf_dir, "events")
-    s = ev.select("event_type", "event_id",
-                  F.unix_micros("ts").alias("us"),
-                  F.round(F.col("value") * 1000000).cast("long")
-                  .alias("xs"),
-                  F.lit(1).cast("long").alias("one"))
-    g = global_prefix_sums(s, ["event_type", "us", "event_id"],
-                           {"gx": "xs", "gi": "one"})
-    tot_rows = (s.groupBy("event_type")
-                .agg(F.count(F.lit(1)).alias("n"),
-                     F.sum("xs").alias("total"))
-                .collect())  # bounded: one row per event type
-    tot_rows.sort(key=lambda r: r["event_type"].encode("utf-8"))
-    base_x = base_i = 0
-    rows = []
-    for r in tot_rows:
-        rows.append((r["event_type"], int(r["n"]), int(r["total"]),
-                     base_x, base_i))
-        base_x += int(r["total"] or 0)
-        base_i += int(r["n"])
-    base = spark.createDataFrame(
-        rows, "event_type STRING, n BIGINT, total BIGINT, "
-              "bx BIGINT, bi BIGINT")
     d38 = "decimal(38,0)"
-    run = (g.join(F.broadcast(base), "event_type")
-           .withColumn("i", F.col("gi") - F.col("bi"))
-           .withColumn("prefix", F.col("gx") - F.col("bx"))
+    run = (_type_prefixes(load_table(spark, sf_dir, "events"))
            .filter(F.col("i") < F.col("n")))
     dev = F.abs(F.col("n").cast(d38) * F.col("prefix")
                 - F.col("i").cast(d38) * F.col("total"))
@@ -2451,8 +2409,8 @@ def events_page_hinkley(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-pass running sum + running min-of-sum (r11): identical exact
     # integers to the former two-call chain, one repartition + one
     # ordered pass instead of two
-    pm = grouped_prefix_aggs(dev, ["event_type"], ["us", "event_id"],
-                             sums={"m": "d"}, min_of_sums={"mm": "m"})
+    pm, _ = grouped_prefix_aggs(dev, ["event_type"], ["us", "event_id"],
+                                {"m": "d"}, min_of_sums={"mm": "m"})
     ex = pm.select("event_type", "us",
                    (F.col("m") - F.col("mm")).alias("exc"))
     alarm = F.col("exc") > _PH_LAMBDA_W

@@ -260,8 +260,9 @@ def sketch_cms_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "price, maximize size) — EXACT without any pairwise "
                 "comparison: dominance reduces to a per-price group "
                 "max plus a distributed STRICT prefix max over the "
-                "price-ordered group table (the global_rank/budget_fill "
-                "range-partition shape), then one equi-join back; "
+                "price-ordered group table (the grouped_prefix_aggs "
+                "range-partition shape with a max carry), then one "
+                "equi-join back; "
                 "oracle = the textbook quadratic NOT EXISTS self-join, "
                 "a genuinely different algorithm agreeing row-for-row "
                 "(operators/analytics.skyline_2d)",
@@ -582,7 +583,7 @@ def stats_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     description="ABC / Pareto revenue classes per part (A = first 70% "
                 "of cumulative revenue, B to 90%, C the tail): the "
                 "global running total uses the distributed range-"
-                "partition prefix-sum shape (budget_fill/global_rank), "
+                "partition prefix scan (grouped_prefix_aggs), "
                 "NOT a single-partition SUM OVER — the oracle's window "
                 "IS that single-task form, a genuinely different "
                 "evaluation agreeing bit-for-bit because the running "
@@ -767,7 +768,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "distinct score (the 2-decimal grid bounds that frame "
                 "independent of row count), distributed prefix sum of "
                 "negative counts over the score order "
-                "(operators/analytics.global_prefix_sum — range "
+                "(operators/analytics.grouped_prefix_aggs — range "
                 "repartition + driver-held per-partition offsets, no "
                 "single-partition window over raw rows), tie-corrected "
                 "U kept as a pure BIGINT (doubled to avoid the .5 tie "
@@ -777,7 +778,7 @@ def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("stats", "ml", "scale"),
 )
 def stats_auc_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     ev = load_table(spark, sf_dir, "events")
     g = (ev.groupBy(F.col("value").alias("s"))
@@ -785,7 +786,7 @@ def stats_auc_purchase(spark: SparkSession, sf_dir: str) -> DataFrame:
               F.sum(F.when(F.col("event_type") == "purchase", 1)
                     .otherwise(0)).alias("pos")))
     g = g.withColumn("neg", F.col("cnt") - F.col("pos"))
-    c = global_prefix_sum(g, [F.col("s")], "neg", out_col="cum_neg")
+    c, _ = grouped_prefix_aggs(g, [], [F.col("s")], {"cum_neg": "neg"})
     t = c.agg(
         F.sum("pos").cast("long").alias("n_pos"),
         F.sum("neg").cast("long").alias("n_neg"),
@@ -971,8 +972,7 @@ def stats_mi_segment_priority(spark: SparkSession,
 )
 def stats_ks_value_purchase(spark: SparkSession,
                             sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import (
-        global_prefix_sums_with_totals)
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     ev = load_table(spark, sf_dir, "events")
     s = ev.select(F.round(F.col("value") * 1000000).cast("long")
@@ -982,8 +982,9 @@ def stats_ks_value_purchase(spark: SparkSession,
     g = (s.groupBy("v")
          .agg(F.sum("p").alias("c1"),
               (F.count(F.lit(1)) - F.sum("p")).alias("c2")))
-    c, (n1, n2) = global_prefix_sums_with_totals(
-        g, ["v"], {"cum1": "c1", "cum2": "c2"})
+    c, totals = grouped_prefix_aggs(g, [], ["v"],
+                                    {"cum1": "c1", "cum2": "c2"})
+    n1, n2 = totals[()]
     d38 = "decimal(38,0)"
     d = F.abs(F.lit(n2).cast(d38) * F.col("cum1")
               - F.lit(n1).cast(d38) * F.col("cum2"))
@@ -1048,7 +1049,7 @@ def stats_ks_value_purchase(spark: SparkSession,
 )
 def stats_spearman_qty_price(spark: SparkSession,
                              sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
     from g1_etl_spark.plans._util import bounded_collect
 
     li = load_table(spark, sf_dir, "lineitem")
@@ -1094,7 +1095,7 @@ def stats_spearman_qty_price(spark: SparkSession,
                 F.sum(F.col("rq2").cast(d38)).alias("sq"),
                 F.sum(F.col("rq2").cast(d38) * F.col("rq2"))
                 .alias("sqq")))
-    pr = (global_prefix_sum(cen, ["p"], "c", out_col="cum")
+    pr = (grouped_prefix_aggs(cen, [], ["p"], {"cum": "c"})[0]
           .withColumn("rp2", 2 * F.col("cum") - F.col("c") + 1))
     t = pr.agg(F.sum("c").alias("n"),
                F.sum(F.col("sq")).alias("sx"),
@@ -1417,7 +1418,7 @@ def sketch_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "exact DOUBLED integers off a cumulative count over "
                 "the distinct-value grid (the 2-decimal grid bounds "
                 "the frame; the cumulative is "
-                "operators/analytics.global_prefix_sum — "
+                "operators/analytics.grouped_prefix_aggs — "
                 "range-partitioned, never a raw-row window). Note the "
                 "doubling cancels: with R'=2R, sum R'^2/n = 4 sum "
                 "R^2/n, so H = 3*S'/(N(N+1)) - 3(N+1) replaces the "
@@ -1430,12 +1431,12 @@ def sketch_bloom_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("stats", "agg"),
 )
 def stats_kruskal_value_type(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     ev = load_table(spark, sf_dir, "events")
     s = ev.select(F.col("event_type").alias("g"), F.col("value").alias("v"))
     vm = s.groupBy("v").agg(F.count(F.lit(1)).alias("cnt"))
-    rm = (global_prefix_sum(vm, ["v"], "cnt", out_col="cum")
+    rm = (grouped_prefix_aggs(vm, [], ["v"], {"cum": "cnt"})[0]
           .select("v", (2 * F.col("cum") - F.col("cnt") + 1).alias("r2")))
     gv = s.groupBy("g", "v").agg(F.count(F.lit(1)).alias("c"))
     gs = (gv.join(rm, "v")
@@ -1604,7 +1605,7 @@ def stats_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "duration order. Determinism: d_i/n_i are exact "
                 "BIGINTs (at-risk counts come from ONE cumulative "
                 "count over the bounded duration grid — "
-                "operators/analytics.global_prefix_sum, no raw-row "
+                "operators/analytics.grouped_prefix_aggs, no raw-row "
                 "window), each factor is two IEEE ops on identical "
                 "operands, and the running product folds left-to-"
                 "right over the SAME sorted bounded array in both "
@@ -1616,7 +1617,7 @@ def stats_theil_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     tags=("stats", "survival", "events"),
 )
 def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     o = load_table(spark, sf_dir, "orders")
     u = (o.groupBy("o_custkey")
@@ -1631,7 +1632,7 @@ def orders_survival_km(spark: SparkSession, sf_dir: str) -> DataFrame:
     g = (d.groupBy("dur")
          .agg(F.count(F.lit(1)).alias("c"),
               F.sum("ev").cast("long").alias("d_i")))
-    r = global_prefix_sum(g, ["dur"], "c", out_col="cle")
+    r, _ = grouped_prefix_aggs(g, [], ["dur"], {"cle": "c"})
     tt = g.agg(F.sum("c").cast("long").alias("tot"))
     ev = (r.crossJoin(F.broadcast(tt))
           .filter(F.col("d_i") > 0)
@@ -1669,7 +1670,7 @@ def logrank_two_cohort(d: DataFrame) -> DataFrame:
     different, censoring-aware?".
 
     Determinism: at-risk counts are exact BIGINTs off ONE
-    global_prefix_sums pass over the bounded duration grid (both
+    grouped_prefix_aggs pass over the bounded duration grid (both
     cohorts' cumulative counts ride the same range-repartition — no
     raw-row window, no single-partition exchange); each per-time term
     is IEEE ops on identical integer operands in both engines, pinned
@@ -1678,14 +1679,15 @@ def logrank_two_cohort(d: DataFrame) -> DataFrame:
     unbounded, the grid is bounded by the day span — the same
     k-row-codebook class as orders_survival_km.
     """
-    from g1_etl_spark.operators.analytics import global_prefix_sums
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     g = (d.groupBy("dur")
          .agg(F.sum("g1").cast("long").alias("c1"),
               (F.count(F.lit(1)) - F.sum("g1")).cast("long").alias("c0"),
               F.sum(F.col("ev") * F.col("g1")).cast("long").alias("d1"),
               F.sum("ev").cast("long").alias("dt")))
-    pref = global_prefix_sums(g, ["dur"], {"cle1": "c1", "cle0": "c0"})
+    pref, _ = grouped_prefix_aggs(g, [], ["dur"],
+                                  {"cle1": "c1", "cle0": "c0"})
     tt = g.agg(F.sum("c1").cast("long").alias("tot1"),
                F.sum("c0").cast("long").alias("tot0"))
     e = (pref.crossJoin(F.broadcast(tt))
@@ -1796,7 +1798,7 @@ def logrank_two_cohort(d: DataFrame) -> DataFrame:
                 "'BUILDING'-segment cohort churn differently from "
                 "everyone else, right-censoring-aware? Same duration/"
                 "censoring definitions as the KM query; both cohorts' "
-                "at-risk counts come from ONE global_prefix_sums pass "
+                "at-risk counts come from ONE grouped_prefix_aggs pass "
                 "over the bounded duration grid, every per-time "
                 "O-E and variance term is pinned through the "
                 "scaled-long fold, and chi2(1) is one division of "
@@ -2471,8 +2473,8 @@ def stats_fdr_bh(spark: SparkSession, sf_dir: str) -> DataFrame:
          .agg(F.sum("h1").cast("long").alias("c1"),
               (F.count(F.lit(1)) - F.sum("h1")).cast("long")
               .alias("c2")))
-    c = grouped_prefix_aggs(g, ["event_type"], ["v"],
-                            sums={"cum1": "c1", "cum2": "c2"})
+    c, _ = grouped_prefix_aggs(g, ["event_type"], ["v"],
+                               {"cum1": "c1", "cum2": "c2"})
     t = (c.groupBy("event_type")
          .agg(F.max("cum1").alias("n1"), F.max("cum2").alias("n2")))
     d38 = "decimal(38,0)"

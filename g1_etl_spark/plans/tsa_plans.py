@@ -1004,7 +1004,7 @@ _WX_CRIT_W = 1_959_964  # round(z_0.975 * 1e6)
                 "dropped (standard), midranks carried as exact "
                 "DOUBLED integers off a cumulative count over the "
                 "distinct-|d| grid (the Kruskal rank machinery — "
-                "operators/analytics.global_prefix_sum, never a "
+                "operators/analytics.grouped_prefix_aggs, never a "
                 "raw-row window), the normal z with the exact tie "
                 "correction, pinned to the 1e-6 grid before the "
                 "5%-level compare (no continuity correction, "
@@ -1014,7 +1014,7 @@ _WX_CRIT_W = 1_959_964  # round(z_0.975 * 1e6)
     tags=("events", "stats"),
 )
 def stats_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     ev = load_table(spark, sf_dir, "events")
     s = (ev.filter(F.col("event_type").isin(_WX_A, _WX_B))
@@ -1036,7 +1036,7 @@ def stats_wilcoxon_signed(spark: SparkSession, sf_dir: str) -> DataFrame:
                    F.abs(F.col("ma") - F.col("mb")).alias("av"))
          .filter(F.col("dv") != 0.0))
     vm = d.groupBy("av").agg(F.count(F.lit(1)).alias("cnt"))
-    rm = (global_prefix_sum(vm, ["av"], "cnt", out_col="cum")
+    rm = (grouped_prefix_aggs(vm, [], ["av"], {"cum": "cnt"})[0]
           .select("av",
                   (2 * F.col("cum") - F.col("cnt") + 1).alias("r2")))
     w = (d.join(rm, "av")

@@ -61,7 +61,7 @@ def test_frame_sampling_fanout(spark):
 
 def test_resize_stub_passthrough(spark):
     m = _media(spark).limit(10)
-    out = M.resize_stub(m, 224, 224)
+    out = M.resize_media(m, 224, 224)
     rows = out.collect()
     orig = {r["media_id"]: bytes(r["content"]) for r in m.collect()}
     for r in rows:
@@ -120,12 +120,6 @@ def test_decode_image_is_stubbed():
         pass
     with pytest.raises(NotImplementedError):
         M.decode_image(b"\x89PNG\r\n")
-
-
-def test_fake_decode_meta_deterministic():
-    a = M.fake_decode_meta(b"x" * 1000)
-    assert a == M.fake_decode_meta(b"y" * 1000)
-    assert a["n_bytes"] == 1000
 
 
 def test_wav_roundtrip_and_signal_features():

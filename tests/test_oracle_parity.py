@@ -59,6 +59,29 @@ def test_contract_shape():
     assert all(callable(f) for f in qs.values())
 
 
+def test_queries_md_is_current():
+    """QUERIES.md is exactly what scripts/gen_query_catalog.py prints
+    from the live registry, so a description edit cannot leave the
+    catalog stale (regenerate with
+    ``python scripts/gen_query_catalog.py > QUERIES.md``)."""
+    import contextlib
+    import importlib.util
+    import io
+    from pathlib import Path
+
+    root = Path(__file__).resolve().parent.parent
+    spec = importlib.util.spec_from_file_location(
+        "gen_query_catalog", root / "scripts" / "gen_query_catalog.py")
+    gen = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(gen)
+    buf = io.StringIO()
+    with contextlib.redirect_stdout(buf):
+        gen.main()
+    assert (root / "QUERIES.md").read_text() == buf.getvalue(), (
+        "QUERIES.md is stale: python scripts/gen_query_catalog.py "
+        "> QUERIES.md")
+
+
 def test_no_oracle_emits_hugeint_or_decimal(duck):
     """DuckDB promotes SUM over integers to HUGEINT (INT128) and leaves
     bare decimal literals as DECIMAL; the driver's value hasher

@@ -348,14 +348,14 @@ def test_auc_perfect_and_tied_separation(spark):
     """Planted fixtures: perfectly separated scores give AUC=1, fully
     reversed give 0, and an all-tied score column gives exactly 0.5
     (the tie-corrected U counts half per tied pair)."""
-    from g1_etl_spark.operators.analytics import global_prefix_sum
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     def auc_of(rows):
         df = spark.createDataFrame(rows, "s DOUBLE, pos LONG")
         g = (df.groupBy("s")
              .agg(F.count(F.lit(1)).alias("cnt"), F.sum("pos").alias("pos"))
              .withColumn("neg", F.col("cnt") - F.col("pos")))
-        c = global_prefix_sum(g, [F.col("s")], "neg", out_col="cum_neg")
+        c, _ = grouped_prefix_aggs(g, [], [F.col("s")], {"cum_neg": "neg"})
         r = c.agg(
             F.sum("pos").alias("np"), F.sum("neg").alias("nn"),
             F.sum(F.col("pos") * (2 * (F.col("cum_neg") - F.col("neg"))
@@ -1249,38 +1249,77 @@ def test_weibull_fit_recovers_exact_weibull_grid(spark):
 
 
 def test_grouped_prefix_aggs_matches_pure_python(spark):
-    """Per-group running sum AND running min over a total order, with
-    enough rows that groups straddle range partitions — verified
-    against a sequential fold."""
+    """Per-group running sum and running min-of-sum over a total order,
+    with enough rows that groups straddle range partitions — verified
+    against a sequential fold, together with the returned totals; also
+    with no group, on empty input, and with 1 and more partitions than
+    rows."""
     import random
-
-    from pyspark.sql import functions as F
 
     from g1_etl_spark.operators.analytics import grouped_prefix_aggs
 
     rng = random.Random(7)
     rows = [(g, i, rng.randint(-50, 50))
             for g in ("a", "b", "c") for i in range(500)]
-    df = spark.createDataFrame(rows, "g string, i long, v long")
-    # running-min of the running-sum, both as the pre-r11 two-call
-    # chain and as the r11 one-pass min_of_sums form — both must match
-    # the sequential fold exactly (events_page_hinkley's shape)
-    out = grouped_prefix_aggs(df, ["g"], ["i"], sums={"cum": "v"})
-    out = grouped_prefix_aggs(out, ["g"], ["i"], mins={"cmin": "cum"})
-    got = {(r["g"], r["i"]): (r["cum"], r["cmin"])
-           for r in out.collect()}
-    one = grouped_prefix_aggs(df, ["g"], ["i"], sums={"cum": "v"},
-                              min_of_sums={"cmin": "cum"})
-    got_one = {(r["g"], r["i"]): (r["cum"], r["cmin"])
-               for r in one.collect()}
-    for g in ("a", "b", "c"):
-        run, mn = 0, None
-        seq = [v for (gg, i, v) in rows if gg == g]
-        for i, v in enumerate(seq):
+    schema = "g string, i long, v long"
+    df = spark.createDataFrame(rows, schema)
+
+    def fold(seq):
+        run, mn, out = 0, None, []
+        for v in seq:
             run += v
             mn = run if mn is None else min(mn, run)
-            assert got[(g, i)] == (run, mn), (g, i)
-            assert got_one[(g, i)] == (run, mn), (g, i)
+            out.append((run, mn))
+        return out
+
+    # events_page_hinkley's shape: running sum + running min of it
+    out, totals = grouped_prefix_aggs(df, ["g"], ["i"], {"cum": "v"},
+                                      min_of_sums={"cmin": "cum"})
+    assert out.columns == ["g", "i", "v", "cum", "cmin"]
+    got = {(r["g"], r["i"]): (r["cum"], r["cmin"]) for r in out.collect()}
+    for g in ("a", "b", "c"):
+        want = fold([v for (gg, _, v) in rows if gg == g])
+        for i, w in enumerate(want):
+            assert got[(g, i)] == w, (g, i)
+        assert totals[(g,)] == (want[-1][0],)
+    assert set(totals) == {("a",), ("b",), ("c",)}
+
+    # no group: one running sum over the (g, i) total order
+    want = fold([v for (_, _, v) in sorted(rows)])
+    for parts in (1, 4, 2 * len(rows)):
+        flat, totals = grouped_prefix_aggs(
+            df, [], ["g", "i"], {"cum": "v", "n": "i"},
+            min_of_sums={"cmin": "cum"}, partitions=parts)
+        got = [(r["cum"], r["cmin"]) for r in flat.orderBy("g", "i")
+               .collect()]
+        assert got == want, parts
+        assert totals == {(): (want[-1][0], sum(range(500)) * 3)}, parts
+
+    # empty input: no rows, zero totals for the one global key
+    empty = spark.createDataFrame([], schema)
+    out, totals = grouped_prefix_aggs(empty, [], ["g", "i"], {"cum": "v"})
+    assert out.collect() == [] and totals == {(): (0,)}
+    out, totals = grouped_prefix_aggs(empty, ["g"], ["i"], {"cum": "v"})
+    assert out.collect() == [] and totals == {}
+
+
+def test_grouped_prefix_aggs_keeps_null_group_keys(spark):
+    """A NULL group key is its own group (SQL PARTITION BY semantics,
+    as in the DuckDB oracles): the carry join is null-safe, so rows
+    with a NULL key keep their running sums instead of vanishing."""
+    from g1_etl_spark.operators.analytics import grouped_prefix_aggs
+
+    rows = [(None if i % 2 else "a", i, i + 1) for i in range(10)]
+    df = spark.createDataFrame(rows, "g string, i long, v long")
+    out, totals = grouped_prefix_aggs(df, ["g"], ["i"], {"cum": "v"},
+                                      partitions=3)
+    got = sorted((r["g"] or "", r["i"], r["cum"]) for r in out.collect())
+    want, run = [], {}
+    for g, i, v in rows:
+        run[g] = run.get(g, 0) + v
+        want.append((g or "", i, run[g]))
+    assert got == sorted(want)
+    assert totals == {("a",): (25,), (None,): (30,)}
 
 
 def test_grouped_prefix_aggs_rejects_nonintegral_values(spark):
